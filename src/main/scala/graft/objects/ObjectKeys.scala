@@ -118,6 +118,25 @@ object FileLocations {
     */
   def distTransactionDefPath(txnId: String): String = s"def/dtxn/$txnId.json"
 
+  /** True for keys whose bytes never change once created: tree nodes,
+    * catalog/namespace/table/view definitions (fresh UUID names) and
+    * the 64-bit version roots (atomic create-once, never reused). A
+    * read cache may serve these without revalidating; the hints
+    * (`vn/latest`, `vn/oldest`), distributed-transaction state
+    * (`def/dtxn/`, `def/dtxnroot/`) and everything under `data/` are
+    * overwritten in place and are NOT write-once.
+    */
+  def isWriteOnce(rel: String): Boolean =
+    WriteOncePrefixes.exists(rel.startsWith) || isRootNodePath(rel)
+
+  private val WriteOncePrefixes =
+    Seq("node/", "def/catalog/", "def/ns/", "def/table/", "def/view/")
+
+  /** True for a [[rootNodePath]] (`vn/` + 64 binary digits). */
+  def isRootNodePath(rel: String): Boolean =
+    rel.length == 3 + 64 && rel.startsWith("vn/") &&
+      rel.iterator.drop(3).forall(c => c == '0' || c == '1')
+
   def tableMetadataPath(ns: String, table: String): String =
     s"data/$ns/$table/meta/${java.util.UUID.randomUUID()}.metadata.json"
 

@@ -139,13 +139,15 @@ object RequestAuthorizer {
 class CatalogHttpServer(storage: StorageOps, port: Int = 0,
     authorizer: RequestAuthorizer = RequestAuthorizer.AllowAll) {
 
-  private val server =
-    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = CatalogHttpServer.bind(port)
 
   /** Starts serving; returns the bound port. */
   def start(): Int = {
     server.createContext("/v1", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(null) // single-threaded is fine for metadata
+    // single-threaded is fine for metadata once the socket is
+    // TCP_NODELAY ([[CatalogHttpServer.bind]]): a request then costs its
+    // handler's time, not a 40 ms delayed-ACK stall
+    server.setExecutor(null)
     server.start()
     server.getAddress.getPort
   }
@@ -712,6 +714,16 @@ class CatalogHttpServer(storage: StorageOps, port: Int = 0,
 }
 
 object CatalogHttpServer {
+  // The JDK server writes response headers and body as two segments;
+  // with Nagle on, the body waits for the client's delayed ACK (~40 ms
+  // on Linux) on every keep-alive request. The JDK reads this property
+  // once, when its ServerConfig class initializes, so it is set here,
+  // before the first `HttpServer.create` in this JVM.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def bind(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+
   /** Thrown by a [[RequestAuthorizer]] to reject a request → HTTP 401
     * with the OpenAPI `NotAuthorizedException` error shape.
     */

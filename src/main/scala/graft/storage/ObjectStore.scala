@@ -7,6 +7,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import graft.objects.FileLocations
+
 /** The narrow API a cloud object store actually offers (reference:
   * s3/src/main/java/org/format/olympia/storage/s3/S3StorageOps.java and
   * S3AtomicOutputStream.java:36-49): no rename, no directories, no
@@ -223,10 +225,16 @@ class DirectoryObjectStoreClient(val backingDir: String) extends ObjectStoreClie
   * - `writeAtomic` IS a conditional PUT — no staging file, no rename;
   *   losing the race surfaces as the store's precondition failure.
   * - `read` goes through a local read cache keyed by etag (reference
-  *   `prepareToReadLocal`, S3StorageOps.java:111-135): node files are
-  *   immutable once created, so a cache hit skips the remote GET
-  *   entirely; the mutable `vn/latest` hint revalidates via HEAD and
-  *   refetches on etag change.
+  *   `prepareToReadLocal`, S3StorageOps.java:111-135). Write-once keys
+  *   ([[FileLocations.isWriteOnce]]: `node/`, `def/{catalog,ns,table,
+  *   view}/`, the 64-bit `vn/<bits>` roots) get fresh names on every
+  *   create and are never rewritten, so a cache hit on one skips the
+  *   store entirely, no HEAD and no GET. Every other key (the `vn/latest`
+  *   and `vn/oldest` hints, `def/dtxn/`, `def/dtxnroot/`, table files
+  *   under `data/`) revalidates via HEAD and refetches on etag change.
+  * - `exists` always asks the store (a size-only HEAD), so a
+  *   write-once object deleted behind this handle (expiry, drop)
+  *   stops existing at once even while its bytes stay cached.
   */
 class ObjectStoreOps(val client: ObjectStoreClient) extends StorageOps {
 
@@ -235,7 +243,10 @@ class ObjectStoreOps(val client: ObjectStoreClient) extends StorageOps {
 
   override def root: String = client.absolute("")
 
-  override def exists(rel: String): Boolean = client.head(rel).isDefined
+  // size, not head: on S3 both are one HEAD, but a store that computes
+  // etags (the directory emulation hashes the whole object) answers a
+  // size from metadata alone
+  override def exists(rel: String): Boolean = client.size(rel).isDefined
 
   override def read(rel: String): Array[Byte] =
     Files.readAllBytes(prepareToReadLocal(rel))
@@ -250,13 +261,17 @@ class ObjectStoreOps(val client: ObjectStoreClient) extends StorageOps {
   }
 
   /** Download-once: returns a local file holding the object's current
-    * content, revalidating the cached copy against the store's etag.
+    * content. A cached write-once object ([[FileLocations.isWriteOnce]])
+    * is returned as is; any other cached copy is revalidated against
+    * the store's etag.
     */
   override def prepareToReadLocal(rel: String): Path = {
+    val cached = Option(cache.get(rel)).filter(e => Files.exists(e._2))
+    if (cached.isDefined && FileLocations.isWriteOnce(rel)) return cached.get._2
     val remoteTag = client.head(rel).getOrElse(
       throw new java.nio.file.NoSuchFileException(rel))
-    Option(cache.get(rel)) match {
-      case Some((tag, path)) if tag == remoteTag && Files.exists(path) => path
+    cached match {
+      case Some((tag, path)) if tag == remoteTag => path
       case _ =>
         val (bytes, tag) = client.get(rel).getOrElse(
           throw new java.nio.file.NoSuchFileException(rel))

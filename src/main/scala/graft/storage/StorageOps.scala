@@ -27,9 +27,13 @@ trait StorageOps {
   /** A LOCAL file holding the object's current content — filesystems
     * return the file itself; remote stores download through their
     * etag-validated read cache (reference `prepareToReadLocal`,
-    * S3StorageOps.java:111-135). This is the only sanctioned way to
-    * hand an object to a local-file reader (e.g. a parquet footer
-    * parse at commit time).
+    * S3StorageOps.java:111-135). A cached write-once key
+    * ([[graft.objects.FileLocations.isWriteOnce]]) is served without
+    * revalidation: its name is created once and never rewritten, so
+    * the cached bytes cannot be stale. Use `exists` to learn whether
+    * such an object is still there; it always asks the store. This is
+    * the only sanctioned way to hand an object to a local-file reader
+    * (e.g. a parquet footer parse at commit time).
     */
   def prepareToReadLocal(rel: String): java.nio.file.Path
 

@@ -325,15 +325,14 @@ object TreeOps {
     * off-by-one, SURVEY §4.3.5).
     */
   def findLatestRoot(storage: StorageOps): Option[TreeRoot] = {
+    // the hint is BEST-EFFORT: read it without an exists probe first; a
+    // missing hint (or one a backend swaps or expires mid-read) raises
+    // an IOException and degrades to the probe-from-v0 path, never
+    // failing the txn
     val hint =
-      if (storage.exists(FileLocations.LatestVersionHint))
-        // the hint is BEST-EFFORT: tolerate an exists→read race (a
-        // backend swapping or expiring the file between the two calls)
-        // by degrading to the probe-from-v0 path, never failing the txn
-        try new String(storage.read(FileLocations.LatestVersionHint), "UTF-8")
-          .trim.toLong
-        catch { case _: java.io.IOException => 0L }
-      else 0L
+      try new String(storage.read(FileLocations.LatestVersionHint), "UTF-8")
+        .trim.toLong
+      catch { case _: java.io.IOException => 0L }
     var v =
       if (storage.exists(FileLocations.rootNodePath(hint))) hint
       else if (storage.exists(FileLocations.rootNodePath(0L))) 0L
@@ -341,9 +340,9 @@ object TreeOps {
         // stale hint AND v0 expired (history expiration): recover by
         // listing vn/ and decoding the reversed-binary version names
         val versions = storage.listPrefix("vn")
-          .map(_.stripPrefix("vn/"))
-          .filter(n => n.length == 64 && n.forall(c => c == '0' || c == '1'))
-          .map(bits => java.lang.Long.reverse(java.lang.Long.parseUnsignedLong(bits, 2)))
+          .filter(FileLocations.isRootNodePath)
+          .map(p => java.lang.Long.reverse(
+            java.lang.Long.parseUnsignedLong(p.stripPrefix("vn/"), 2)))
         if (versions.isEmpty) return None
         versions.max
       }

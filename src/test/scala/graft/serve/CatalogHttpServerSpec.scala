@@ -4,7 +4,10 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
+import graft.catalog.Graft
+import graft.objects.{CatalogDef, NamespaceDef, TableDef}
 import graft.spark.GraftCatalog
+import graft.storage.LocalStorageOps
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -258,5 +261,35 @@ class CatalogHttpServerSpec extends AnyFunSuite {
     // wrong secret still refuses (constant-time compare path)
     assert(auth.issueToken("svc", "pW", None).isEmpty)
     assert(auth.issueToken("nosuch", "pw", None).isEmpty)
+  }
+
+  test("keep-alive GETs answer without a delayed-ACK stall") {
+    // Nagle on the server socket holds each response body until the
+    // client ACKs the headers, which Linux delays ~40 ms: 50 requests
+    // would take >= 2 s. With TCP_NODELAY they take a few ms each.
+    val storage = new LocalStorageOps(
+      Files.createTempDirectory("graft-http-nodelay").toString)
+    Graft.createCatalog(storage, CatalogDef())
+    val txn = Graft.beginTransaction(storage)
+    Graft.createNamespace(storage, txn, NamespaceDef("ns"))
+    Graft.createTable(storage, txn,
+      TableDef("t", "ns", metadataLocation = "data/ns/t/meta/0.json"))
+    Graft.commitTransaction(storage, txn)
+    val server = new CatalogHttpServer(storage)
+    val port = server.start()
+    val http11 = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(
+      URI.create(s"http://127.0.0.1:$port/v1/namespaces/ns/tables/t")).build()
+    def fetch(): Unit = {
+      val res = http11.send(req, HttpResponse.BodyHandlers.ofString())
+      assert(res.statusCode() == 200 && res.body().contains("\"name\":\"t\""))
+    }
+    try {
+      fetch() // open the connection and warm the handler
+      val t0 = System.nanoTime()
+      (1 to 50).foreach(_ => fetch())
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 1000, f"50 keep-alive GETs took $ms%.0f ms")
+    } finally server.stop()
   }
 }

@@ -4,6 +4,13 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import graft.catalog.Graft
+import graft.maintain.Maintenance
+import graft.objects.{FileLocations, NamespaceDef}
+import graft.tree.TreeOps
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Port of the reference's abstract StorageOpsTests (32-184), bound
@@ -127,38 +134,139 @@ class DirectoryObjectStoreOpsSpec extends StorageOpsContract {
       Files.createTempDirectory("graft-osops").toString))
 }
 
+/** Client decorator counting the calls a store would bill. */
+private class CountingClient(inner: ObjectStoreClient) extends ObjectStoreClient {
+  val heads = new AtomicInteger(0)
+  val sizes = new AtomicInteger(0)
+  val gets = new AtomicInteger(0)
+  def reset(): Unit = Seq(heads, sizes, gets).foreach(_.set(0))
+  override def head(key: String) = { heads.incrementAndGet(); inner.head(key) }
+  override def size(key: String) = { sizes.incrementAndGet(); inner.size(key) }
+  override def get(key: String) = { gets.incrementAndGet(); inner.get(key) }
+  override def putIfNoneMatch(key: String, data: Array[Byte]) =
+    inner.putIfNoneMatch(key, data)
+  override def put(key: String, data: Array[Byte]) = inner.put(key, data)
+  override def delete(keys: Seq[String]) = inner.delete(keys)
+  override def list(prefix: String) = inner.list(prefix)
+  override def listDeep(prefix: String) = inner.listDeep(prefix)
+  override def copy(srcKey: String, dstKey: String) = inner.copy(srcKey, dstKey)
+  override def absolute(key: String) = inner.absolute(key)
+}
+
 /** Behaviors specific to the object-store backend: the read cache and
   * the two-handles-one-bucket topology.
   */
 class ObjectStoreReadCacheSpec extends AnyFunSuite {
 
+  private val writeOnceKeys = Seq(
+    FileLocations.newNodePath(),
+    FileLocations.newCatalogDefPath(),
+    FileLocations.newNamespaceDefPath("ns"),
+    FileLocations.newTableDefPath("ns", "t"),
+    FileLocations.newViewDefPath("ns", "v"),
+    FileLocations.rootNodePath(0L),
+    FileLocations.rootNodePath(5L))
+
+  private val mutableKeys = Seq(
+    FileLocations.LatestVersionHint,
+    FileLocations.OldestVersionHint,
+    FileLocations.distTransactionDefPath("t1"),
+    "def/dtxnroot/t1.arrow")
+
   test("read cache serves immutable objects without refetch, revalidates mutated ones") {
     val client = new InMemoryObjectStoreClient
-    val counting = new ObjectStoreClient {
-      val gets = new AtomicInteger(0)
-      override def head(key: String) = client.head(key)
-      override def size(key: String) = client.size(key)
-      override def get(key: String) = { gets.incrementAndGet(); client.get(key) }
-      override def putIfNoneMatch(key: String, data: Array[Byte]) =
-        client.putIfNoneMatch(key, data)
-      override def put(key: String, data: Array[Byte]) = client.put(key, data)
-      override def delete(keys: Seq[String]) = client.delete(keys)
-      override def list(prefix: String) = client.list(prefix)
-      override def listDeep(prefix: String) = client.listDeep(prefix)
-      override def copy(srcKey: String, dstKey: String) = client.copy(srcKey, dstKey)
-      override def absolute(key: String) = client.absolute(key)
-    }
+    val counting = new CountingClient(client)
     val ops = new ObjectStoreOps(counting)
     ops.writeAtomic("node/a", "v1".getBytes)
+    ops.writeAtomic(FileLocations.LatestVersionHint, "1".getBytes)
     // writeAtomic seeded the cache: reads hit local disk, zero GETs
     assert(new String(ops.read("node/a")) == "v1")
     assert(new String(ops.read("node/a")) == "v1")
+    assert(new String(ops.read(FileLocations.LatestVersionHint)) == "1")
     assert(counting.gets.get() == 0)
     // a mutation BEHIND the ops handle (another process overwrote the
     // hint object) changes the etag — HEAD revalidation must refetch
-    client.put("node/a", "v2".getBytes)
-    assert(new String(ops.read("node/a")) == "v2")
+    client.put(FileLocations.LatestVersionHint, "2".getBytes)
+    assert(new String(ops.read(FileLocations.LatestVersionHint)) == "2")
     assert(counting.gets.get() == 1)
+  }
+
+  test("write-once keys: once cached, a read costs no HEAD, size or GET") {
+    writeOnceKeys.foreach(k => assert(FileLocations.isWriteOnce(k), k))
+    mutableKeys.foreach(k => assert(!FileLocations.isWriteOnce(k), k))
+    Seq("vn/0101", "data/ns/t/files/x.parquet", "node").foreach(k =>
+      assert(!FileLocations.isWriteOnce(k), k))
+
+    val client = new InMemoryObjectStoreClient
+    val counting = new CountingClient(client)
+    val a = new ObjectStoreOps(counting)
+    val b = new ObjectStoreOps(client)
+    // written by another handle: a's first read is a miss and fetches
+    writeOnceKeys.foreach(k => b.writeAtomic(k, k.getBytes))
+    writeOnceKeys.foreach(k => assert(new String(a.read(k)) == k))
+    assert(counting.gets.get() == writeOnceKeys.size)
+    counting.reset()
+    (1 to 3).foreach(_ => writeOnceKeys.foreach { k =>
+      assert(new String(a.read(k)) == k)
+      assert(Files.exists(a.prepareToReadLocal(k)))
+    })
+    assert((counting.heads.get(), counting.sizes.get(), counting.gets.get()) ==
+      ((0, 0, 0)))
+  }
+
+  test("mutable keys overwritten through another handle are read fresh") {
+    val client = new InMemoryObjectStoreClient
+    val a = new ObjectStoreOps(client)
+    val b = new ObjectStoreOps(client)
+    mutableKeys.foreach { k =>
+      b.overwrite(k, s"$k@1".getBytes)
+      assert(new String(a.read(k)) == s"$k@1")
+      b.overwrite(k, s"$k@2".getBytes)
+      assert(new String(a.read(k)) == s"$k@2", k)
+    }
+  }
+
+  test("a write-once object deleted behind a handle stops existing for it") {
+    val client = new InMemoryObjectStoreClient
+    val a = new ObjectStoreOps(client)
+    val b = new ObjectStoreOps(client)
+    val node = FileLocations.newNodePath()
+    a.writeAtomic(node, "n".getBytes)
+    assert(new String(a.read(node)) == "n")
+    b.deleteBatch(Seq(node))
+    assert(!a.exists(node))
+  }
+
+  test("catalog versions expired through one handle: AS OF below the floor fails through another") {
+    val dir = Files.createTempDirectory("graft-osexp").toString
+    val cat = new graft.spark.GraftCatalog
+    cat.initialize("c", new CaseInsensitiveStringMap(
+      Map("warehouse" -> dir, "storage" -> "object").asJava))
+    val b = cat.storage
+    (1 to 5).foreach { i =>
+      val txn = Graft.beginTransaction(b)
+      Graft.createNamespace(b, txn, NamespaceDef(s"ns$i"))
+      Graft.commitTransaction(b, txn)
+    }
+    val a = new ObjectStoreOps(new DirectoryObjectStoreClient(dir))
+    val latest = TreeOps.findLatestRoot(a).get
+    try {
+      // handle a caches every root, so an expired one is still cached
+      (0L until latest.version).foreach(v =>
+        TreeOps.findRootForVersion(a, latest, v).close())
+      def floorError(v: Long): String = intercept[IllegalArgumentException](
+        TreeOps.findRootForVersion(a, latest, v)).getMessage
+      Maintenance.expireCatalogVersions(cat, keepLast = 4)
+      val floor1 = latest.version - 3
+      assert(floorError(0L).contains(s"oldest retained: $floor1"))
+      // a second expiry moves the floor: a's cached copy of the old
+      // `vn/oldest` must not be served
+      Maintenance.expireCatalogVersions(cat, keepLast = 2)
+      val floor2 = latest.version - 1
+      assert(floorError(floor1).contains(s"oldest retained: $floor2"))
+      val retained = TreeOps.findRootForVersion(a, latest, floor2)
+      try assert(retained.version == floor2) finally retained.close()
+    } finally latest.close()
   }
 
   test("two handles over one store: second process reads the first's writes") {
