@@ -805,14 +805,10 @@ object MaterializedViews {
       // non-nullable metadata — so the refresh MERGE plans as WriteDelta
       // (pos-delete objects + new rows, O(delta)) instead of ReplaceData
       // (runtime group-filter subquery re-executing the source + a full
-      // rewrite of every touched state file). Conf-gated: at 100 TB the
-      // O(delta) write is the only viable shape, but on small state the
-      // accumulated delete files tax every later read — measure both.
-      else if (spark.conf.get("spark.graft.mv.state.mor-fallback",
-        "true").toBoolean) Map(
+      // rewrite of every touched state file).
+      else Map(
         graft.spark.GraftCatalog.MergeModeProp ->
-          graft.spark.GraftCatalog.DeleteModeMergeOnRead)
-      else Map.empty) ++
+          graft.spark.GraftCatalog.DeleteModeMergeOnRead)) ++
       where.map(WhereProp -> _) ++
       join.toSeq.flatMap(j => Seq(Join2NsProp -> j.ns,
         Join2TableProp -> j.table, JoinOnProp -> j.onFormatted,

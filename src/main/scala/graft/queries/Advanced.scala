@@ -949,7 +949,7 @@ object Advanced {
         //     is per-node-small and lets every edge-scale frame
         //     unpersist before return, so the sf1 back-to-back leak
         //     discipline holds; it stays cached for the caller's
-        //     collect. Intermediate cadence is conf-gated (below).
+        //     collect. No intermediate checkpoints (cadence A/B below).
         var lastCp: org.apache.spark.sql.DataFrame = null
         (1 to 5).foreach { i =>
           val cb = rank
@@ -970,12 +970,8 @@ object Advanced {
           // one deep plan (5 chained broadcast join+agg stages) beats
           // intermediate materializations: each checkpoint pays its own
           // jobs + block-manager writes while AQE already runs the
-          // chain stage-by-stage. Lineage stays bounded at 5 joins;
-          // the conf restores the eager cadence for iteration counts
-          // where one plan would outgrow the planner.
-          rank = if (i == 5 || ((i % 2 == 0) && s.conf
-              .getOption("spark.graft.pagerank.checkpoint-every-2")
-              .exists(_.toBoolean))) {
+          // chain stage-by-stage. Lineage stays bounded at 5 joins.
+          rank = if (i == 5) {
             val cp = next.localCheckpoint()
             if (lastCp != null) lastCp.unpersist()
             lastCp = cp

@@ -6,6 +6,7 @@ import graft.format.{DataFileEntry, Manifests, Snapshot, TableMetadata}
 import graft.objects.{FileLocations, TableDef}
 import graft.storage.StorageOps
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
@@ -116,71 +117,55 @@ private[spark] object GraftChanges {
 
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
-    val rixSchema = StructType(physSchema.fields :+ SparkInternals.rowIndexField)
+    val rixSchema = StructType(physSchema.fields :+ MorDeleteReader.rowIndexField)
     val parentTuples = parentEntries.map(f => (storage.absolute(f.path), f))
     val parentPosIdx = MorDeletes.posIndex(parentTuples,
       parent.map(_.posDeletes).getOrElse(Seq.empty)
         .map(p => (storage.absolute(p.path), p)))
-    def attrsOf(st: StructType) = st.fields.toIndexedSeq.map(f =>
-      org.apache.spark.sql.catalyst.expressions
-        .AttributeReference(f.name, f.dataType, f.nullable)())
-
-    // parent equality deletes (streaming upserts): a row the PARENT
-    // already replaced must never re-surface as this snapshot's delete
-    val parentEqList = parent.map(_.eqDeletes).getOrElse(Seq.empty)
-    def eqSpec(d: graft.format.EqDeleteFile): SparkInternals.EqDeleteSpec =
-      SparkInternals.EqDeleteSpec(storage.absolute(d.path), d.cols,
-        d.cols.map(c => physSchema.fieldIndex(c)).toArray,
-        d.cols.map(c => physSchema(c).dataType).toArray)
-    /** Sub-group `es` by applicable parent-eq set; build each group's
-      * batch (rows already projected to physSchema), anti-filtering
-      * parent-eq-deleted rows out.
-      */
-    def withParentEq(es: Seq[(String, DataFileEntry)])(
-        mk: Seq[(String, DataFileEntry)] => Batch): Seq[Batch] =
-      es.groupBy(e =>
-          MorDeletes.applicableEq(parentEqList, e._2.seq).map(_.path))
-        .toSeq.sortBy(_._1.length).map { case (pePaths, g) =>
-          val b = mk(g)
-          if (pePaths.isEmpty) b
-          else SparkInternals.eqDeleteFilteredBatch(b,
-            pePaths.map(pp => eqSpec(parentEqList.find(_.path == pp).get)),
-            conf, physSchema, physSchema.length)
-        }
-
-    // merge-on-read predicate DELETE: new predicates vs the parent
     val parentPreds = parent.map(_.deletes).getOrElse(Seq.empty)
+    val parentEqList = parent.map(_.eqDeletes).getOrElse(Seq.empty)
+    def withAbs(d: graft.format.EqDeleteFile) = (storage.absolute(d.path), d)
+
+    /** This snapshot's deleted rows among `reach` (parent files), one
+      * delete-reader pass per (parent predicate epoch × parent eq set)
+      * group. A row is emitted iff it survived the parent — its
+      * predicates, positions and equality keys (a row the parent
+      * already replaced must never re-surface as this snapshot's
+      * delete) — AND this snapshot deletes it: `deleted` holds, or
+      * `newPos` names its position, or it matches a key of `newEq`.
+      */
+    def deletedRows(reach: Seq[(String, DataFileEntry)],
+        deleted: Option[Expression] = None,
+        newPos: Option[String => Seq[String]] = None,
+        newEq: Seq[graft.format.EqDeleteFile] = Nil): Seq[Batch] =
+      MorDeletes.groups(reach, parentPreds).filter(_._2.nonEmpty).flatMap {
+        case (priorApplicable, esP) =>
+          val keep = (Option.when(priorApplicable.nonEmpty)(
+            MorDeletes.keepExpr(spark, priorApplicable)) ++ deleted)
+            .reduceOption(And(_, _))
+          esP.groupBy(e => MorDeletes.applicableEq(parentEqList, e._2.seq))
+            .toSeq.sortBy(_._1.length).map { case (parentEqs, es) =>
+              tag(MorDeleteReader.batch(delegate(es, rixSchema), rixSchema,
+                physSchema.length, conf, keep = keep,
+                eqAnti = parentEqs.map(withAbs), eqSemi = newEq.map(withAbs),
+                positions = Some(PositionTest(physSchema.length,
+                  p => parentPosIdx.getOrElse(p, Seq.empty), newPos))),
+                "delete")
+            }
+      }
+
+    // merge-on-read predicate DELETE: parent files the new predicate
+    // covers, rows it matches
     val priorSet = parentPreds.toSet
     val predDeletes = s.deletes.filterNot(priorSet).flatMap { pred =>
-      MorDeletes.groups(
-        parentTuples.filter(t =>
-          MorDeletes.applicable(Seq(pred), t._2.seq).nonEmpty),
-        parentPreds).filter(_._2.nonEmpty).flatMap { case (priorApplicable, esP) =>
-        val attrs = attrsOf(rixSchema)
-        val byName = attrs.map(a => a.name -> a).toMap
-        val newPredExpr = org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(
-          spark.sessionState.sqlParser.parseExpression(pred.sql).transform {
-            case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-                if byName.contains(u.nameParts.last) =>
-              byName(u.nameParts.last)
-          },
-          org.apache.spark.sql.catalyst.expressions.Literal(false)))
-        val cond =
-          if (priorApplicable.isEmpty) newPredExpr
-          else org.apache.spark.sql.catalyst.expressions.And(
-            MorDeletes.keepExpr(spark, priorApplicable, attrs), newPredExpr)
-        withParentEq(esP) { es =>
-          SparkInternals.cdcDeleteBatch(
-            delegate(es, rixSchema), cond,
-            p => parentPosIdx.getOrElse(p, Seq.empty),
-            _ => Seq.empty, conf, rixSchema,
-            rixOrdinal = physSchema.length, keepN = physSchema.length,
-            requireNewDels = false)
-        }.map(tag(_, "delete"))
-      }
+      deletedRows(
+        parentTuples.filter(t => MorDeletes.applicable(Seq(pred), t._2.seq).nonEmpty),
+        deleted = Some(MorDeletes.deletedExpr(spark, pred)))
     }
 
-    // position deltas: rows the NEW delete objects name
+    // position deltas: rows the NEW delete objects name; a referenced-
+    // file list can overshoot (other groups' files), and a file no new
+    // object names is dropped at planning
     val priorPos = parent.map(_.posDeletes).getOrElse(Seq.empty)
       .map(_.path).toSet
     val newPos = s.posDeletes.filterNot(p => priorPos(p.path))
@@ -191,51 +176,15 @@ private[spark] object GraftChanges {
         val refTuples = parentTuples.filter(t => refRel(t._2.path))
         val newIdx = MorDeletes.posIndex(refTuples,
           newPos.map(p => (storage.absolute(p.path), p)))
-        MorDeletes.groups(refTuples, parentPreds)
-          .filter(_._2.nonEmpty).flatMap { case (priorApplicable, esP) =>
-            val attrs = attrsOf(rixSchema)
-            val cond =
-              if (priorApplicable.isEmpty)
-                org.apache.spark.sql.catalyst.expressions.Literal(true)
-              else MorDeletes.keepExpr(spark, priorApplicable, attrs)
-            withParentEq(esP) { es =>
-              SparkInternals.cdcDeleteBatch(
-                delegate(es, rixSchema), cond,
-                p => parentPosIdx.getOrElse(p, Seq.empty),
-                p => newIdx.getOrElse(p, Seq.empty), conf, rixSchema,
-                rixOrdinal = physSchema.length, keepN = physSchema.length,
-                requireNewDels = true)
-            }.map(tag(_, "delete"))
-          }
+        deletedRows(refTuples, newPos = Some(p => newIdx.getOrElse(p, Seq.empty)))
       }
 
     // streaming upserts: rows of strictly-older files whose key tuple
-    // is in a NEW equality-delete object are this snapshot's deletes —
-    // parent survivors (parent predicates, position AND equality
-    // residuals applied) semi-filtered by the new object's key set
+    // is in a NEW equality-delete object are this snapshot's deletes
     val priorEqPaths = parentEqList.map(_.path).toSet
     val eqDeletes = s.eqDeletes.filterNot(p => priorEqPaths(p.path))
-      .flatMap { d =>
-        val reach = parentTuples.filter(_._2.seq < d.seq)
-        MorDeletes.groups(reach, parentPreds)
-          .filter(_._2.nonEmpty).flatMap { case (priorApplicable, esP) =>
-            val attrs = attrsOf(rixSchema)
-            val cond =
-              if (priorApplicable.isEmpty)
-                org.apache.spark.sql.catalyst.expressions.Literal(true)
-              else MorDeletes.keepExpr(spark, priorApplicable, attrs)
-            withParentEq(esP) { es =>
-              SparkInternals.cdcDeleteBatch(
-                delegate(es, rixSchema), cond,
-                p => parentPosIdx.getOrElse(p, Seq.empty),
-                _ => Seq.empty, conf, rixSchema,
-                rixOrdinal = physSchema.length, keepN = physSchema.length,
-                requireNewDels = false)
-            }.map(b => tag(SparkInternals.eqDeleteFilteredBatch(b,
-              Seq(eqSpec(d)), conf, physSchema, physSchema.length,
-              keepMatches = true), "delete"))
-          }
-      }
+      .flatMap(d => deletedRows(parentTuples.filter(_._2.seq < d.seq),
+        newEq = Seq(d)))
 
     inserts ++ predDeletes ++ posDeletes ++ eqDeletes
   }

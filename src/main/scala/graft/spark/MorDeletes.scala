@@ -3,8 +3,9 @@ package graft.spark
 import graft.format.{DataFileEntry, DeletePredicate, EqDeleteFile}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Coalesce, Expression, Literal, Not}
+import org.apache.spark.sql.catalyst.expressions.{And, Coalesce, Expression, Literal, Not}
 import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
+import org.apache.spark.sql.types.StructType
 
 /** Merge-on-read delete mechanics shared by the scan path, the
   * copy-on-write rewrite paths, compaction, and CDC.
@@ -50,23 +51,17 @@ private[graft] object MorDeletes {
     entries.groupBy(e => applicable(deletes, e._2.seq))
       .toSeq.sortBy(_._1.length)
 
-  /** Catalyst survive-condition over `attrs` (physical names):
-    * AND over predicates of NOT(coalesce(pred, false)).
+  /** Catalyst survive-condition: AND over predicates of
+    * NOT(coalesce(pred, false)). Columns stay names (physical);
+    * [[MorDeleteReader]] binds them to its read schema.
     */
-  def keepExpr(spark: SparkSession, preds: Seq[DeletePredicate],
-      attrs: Seq[Attribute]): Expression = {
-    val byName = attrs.map(a => a.name -> a).toMap
-    preds.map { p =>
-      val parsed = spark.sessionState.sqlParser.parseExpression(p.sql)
-      val resolved = parsed.transform {
-        case u: UnresolvedAttribute if byName.contains(u.nameParts.last) =>
-          byName(u.nameParts.last)
-      }
-      require(!resolved.exists(_.isInstanceOf[UnresolvedAttribute]),
-        s"delete predicate references unknown column: ${p.sql}")
-      Not(Coalesce(Seq(resolved, Literal(false)))): Expression
-    }.reduce(And(_, _))
-  }
+  def keepExpr(spark: SparkSession, preds: Seq[DeletePredicate]): Expression =
+    preds.map(p => Not(deletedExpr(spark, p)): Expression).reduce(And(_, _))
+
+  /** TRUE exactly for the rows `p` deletes: coalesce(pred, false). */
+  def deletedExpr(spark: SparkSession, p: DeletePredicate): Expression =
+    Coalesce(Seq(spark.sessionState.sqlParser.parseExpression(p.sql),
+      Literal(false)))
 
   /** Column names a predicate list reads (physical). */
   def referencedColumns(spark: SparkSession,
@@ -87,17 +82,16 @@ private[graft] object MorDeletes {
     * delete-aware reads, so predicate deletes and position deletes can
     * never drift apart between them.
     *
-    * Grouping: files first split by applicable predicate epoch
-    * ([[groups]]), then by position-delete coverage — an uncovered
-    * file with no predicates keeps the plain (columnar-capable)
-    * delegate read and never pays for the row-index column unless
-    * `_pos` itself was requested.
+    * Each group's pending deletes — predicate, equality and position —
+    * apply in ONE [[MorDeleteReader]] pass; a group with none keeps the
+    * plain (columnar-capable) delegate read and never pays for the
+    * row-index column unless `_pos` itself was requested.
     *
     * Row layout contract: delegate rows are `physRequired ++ [rix if
-    * needed] ++ [predicate-only extras]`; predicate residuals project
-    * extras away, position filtering projects rix away unless `hasPos`
-    * (rix then IS the `_pos` output), `_file` tags last. Output rows
-    * are `data ++ [_pos] ++ [_file]`.
+    * needed] ++ [eq-key and predicate-only extras]`; the reader projects
+    * extras away, and rix too unless `hasPos` (rix then IS the `_pos`
+    * output), `_file` tags last. Output rows are
+    * `data ++ [_pos] ++ [_file]`.
     */
   def morBatches(
       spark: SparkSession,
@@ -105,13 +99,13 @@ private[graft] object MorDeletes {
       deletes: Seq[DeletePredicate],
       posByNorm: Map[String, Seq[String]],
       eqDeletes: Seq[(String, EqDeleteFile)],
-      physSchema: org.apache.spark.sql.types.StructType,
-      physRequired: org.apache.spark.sql.types.StructType,
+      physSchema: StructType,
+      physRequired: StructType,
       partCols: Seq[String],
       hasFile: Boolean,
       hasPos: Boolean,
       delegateScan: (Seq[(String, DataFileEntry)],
-        org.apache.spark.sql.types.StructType) =>
+        StructType) =>
         org.apache.spark.sql.connector.read.Scan,
       // group SKELETON source: when runtime filtering can narrow
       // `kept` between builds, pass the FULL candidate set here so
@@ -121,11 +115,11 @@ private[graft] object MorDeletes {
       structureFrom: Option[Seq[(String, DataFileEntry)]] = None)
       : Seq[org.apache.spark.sql.connector.read.Batch] = {
     import org.apache.spark.sql.graft.SparkInternals
-    import org.apache.spark.sql.types.StructType
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
     val structural = structureFrom.getOrElse(kept)
     val keptAbs = kept.map(_._1).toSet
+    // output width: data ++ [_pos]; `_file` tags right after
     val fileTagOrdinal = physRequired.length + (if (hasPos) 1 else 0)
     // the delegated parquet scan returns requested data fields in
     // request order but Hive-partition fields LAST (in spec order);
@@ -141,64 +135,32 @@ private[graft] object MorDeletes {
       val nat = naturalOf(req)
       if (nat == req) b else SparkInternals.reorderedBatch(b, nat, req)
     }
-    // files group by (predicate epoch × applicable equality-delete
-    // set) — group count is bounded by distinct delete epochs, never
-    // by file count; the no-delete group keeps the plain columnar read.
-    // Grouping runs over `structural` so the group LIST is identical
-    // across rebuilds; each group then reads only its currently-kept
-    // files (empty after narrowing → placeholder with no partitions).
+    // one read schema per group: `physRequired ++ [rix if needed] ++
+    // [eq-key extras] ++ [predicate extras]` — columns the projection
+    // pruned are still READ for the test, then projected away
     def buildGroup(es: Seq[(String, DataFileEntry)], cov: Boolean,
         preds: Seq[DeletePredicate],
         eqs: Seq[(String, EqDeleteFile)])
         : org.apache.spark.sql.connector.read.Batch = {
-              val needRix = hasPos || cov
-              val dataPhys =
-                if (needRix) StructType(physRequired.fields :+
-                  SparkInternals.rowIndexField)
-                else physRequired
-              // equality-key columns the projection pruned must still
-              // be read (dropped again right after the eq filter); rix
-              // stays inside dataPhys so the position stage's ordinal
-              // is unaffected
-              val eqExtra = eqs.flatMap(_._2.cols).distinct
-                .filterNot(dataPhys.fieldNames.contains)
-                .filter(physSchema.fieldNames.contains)
-              val dataEq = StructType(
-                dataPhys.fields ++ eqExtra.map(physSchema(_)))
-              val base =
-                if (preds.isEmpty) delegateBatch(es, dataEq)
-                else {
-                  // predicate columns the projection pruned must still be
-                  // READ (then dropped after filtering)
-                  val extra = referencedColumns(spark, preds)
-                    .filterNot(dataEq.fieldNames.contains)
-                    .filter(physSchema.fieldNames.contains)
-                  val readPhys = StructType(
-                    dataEq.fields ++ extra.map(physSchema(_)))
-                  SparkInternals.filteredProjectedBatch(
-                    delegateBatch(es, readPhys),
-                    keepExpr(spark, preds,
-                      readPhys.fields.toIndexedSeq.map(f =>
-                        org.apache.spark.sql.catalyst.expressions
-                          .AttributeReference(f.name, f.dataType, f.nullable)())),
-                    readPhys, dataEq.length)
-                }
-              val eqed =
-                if (eqs.isEmpty) base
-                else SparkInternals.eqDeleteFilteredBatch(base,
-                  eqs.map { case (abs, d) =>
-                    val ords = d.cols.map(c => dataEq.fieldIndex(c)).toArray
-                    val types = d.cols.map(c => dataEq(c).dataType).toArray
-                    SparkInternals.EqDeleteSpec(abs, d.cols, ords, types)
-                  }, conf, dataEq, dataPhys.length)
-              val posed =
-                if (cov) SparkInternals.posDeleteFilteredBatch(eqed,
-                  p => posByNorm.getOrElse(p, Seq.empty), conf, dataPhys,
-                  physRequired.length,
-                  if (hasPos) dataPhys.length else physRequired.length)
-                else eqed
-              if (hasFile) SparkInternals.fileTaggedBatch(posed, fileTagOrdinal)
-              else posed
+      val dataPhys =
+        if (hasPos || cov) StructType(physRequired.fields :+
+          MorDeleteReader.rowIndexField)
+        else physRequired
+      val extra = (eqs.flatMap(_._2.cols) ++ referencedColumns(spark, preds))
+        .distinct.filterNot(dataPhys.fieldNames.contains)
+        .filter(physSchema.fieldNames.contains)
+      val readPhys = StructType(dataPhys.fields ++ extra.map(physSchema(_)))
+      val base = delegateBatch(es, readPhys)
+      val tagged =
+        if (preds.isEmpty && eqs.isEmpty && !cov) base
+        else MorDeleteReader.batch(base, readPhys, fileTagOrdinal, conf,
+          keep = if (preds.isEmpty) None
+            else Some(keepExpr(spark, preds)),
+          eqAnti = eqs,
+          positions = if (!cov) None else Some(PositionTest(
+            physRequired.length, p => posByNorm.getOrElse(p, Seq.empty))))
+      if (hasFile) SparkInternals.fileTaggedBatch(tagged, fileTagOrdinal)
+      else tagged
     }
 
     // files group by (predicate epoch × applicable equality-delete
@@ -265,16 +227,6 @@ private[graft] object MorDeletes {
       "^[a-zA-Z][a-zA-Z0-9+.-]*:", "")
   }
 
-  /** Read `entries` (absolute path, entry) as ONE DataFrame under
-    * `physSchema`, with every applicable pending delete applied —
-    * predicate deletes as residual filters, position deletes
-    * (`posDeleteAbs`: the delete objects' absolute paths) as a
-    * distributed anti-join on `(file, row_index)`. This is the read
-    * every rewrite path (copy-on-write row ops, compaction, CDC) must
-    * use so logically-deleted rows never resurrect through a rewrite.
-    * With `exposePos` the result keeps [[GFile]]/[[GPos] ]columns for
-    * callers that need the row id (CDC joins).
-    */
   /** Broadcast a delete-object frame only while its aggregate size is
     * comfortably bounded; past the threshold leave the strategy to the
     * planner (shuffle anti-join). A long-running upsert stream can
@@ -292,6 +244,17 @@ private[graft] object MorDeletes {
     else df
   }
 
+  /** Read `entries` (absolute path, entry) as ONE DataFrame under
+    * `physSchema`, with every applicable pending delete applied —
+    * predicate deletes as residual filters, equality deletes as
+    * null-safe anti-joins on their key columns, position deletes
+    * (`posDeleteAbs`: the delete objects' absolute paths) as a
+    * distributed anti-join on `(file, row_index)`. This is the read
+    * every rewrite path (copy-on-write row ops, compaction, CDC) must
+    * use so logically-deleted rows never resurrect through a rewrite.
+    * With `exposePos` the result keeps [[GFile]]/[[GPos]] columns for
+    * callers that need the row id (CDC joins).
+    */
   def readEntries(spark: SparkSession,
       physSchema: org.apache.spark.sql.types.StructType,
       basePath: Option[String],

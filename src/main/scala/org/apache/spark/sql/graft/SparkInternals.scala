@@ -20,10 +20,19 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** Access seam for `private[sql]` Spark internals the graft connector
-  * builds on (the standard connector-shim pattern — a small file in the
-  * `org.apache.spark.sql` namespace; everything here is thin glue over
-  * Spark's own write/read machinery, no behavior of its own).
+/** Access seam for Spark internals the graft connector builds on (the
+  * standard connector-shim pattern — a small file in the
+  * `org.apache.spark.sql` namespace). Only three entries need that
+  * namespace's `private[sql]` access: [[column]] (the classic-session
+  * expression bridge), [[unwrapRowLevelTable]] and
+  * [[unloadAllStateStores]]. The rest uses public, if unstable, Spark
+  * classes and could move out: glue over Spark's parquet write and
+  * file-index machinery ([[parquetBatchWrite]], [[derivingWriterFactory]],
+  * [[parquetScanBuilder]]) and the batch plumbing the scan paths share
+  * (one-file partitions with a `_file` tag, column reorder, constant
+  * tags, key grouping, concatenation), which wraps delegate readers
+  * without dropping a row. No delete logic lives here: merge-on-read
+  * deletes apply in [[graft.spark.MorDeleteReader]].
   */
 object SparkInternals {
 
@@ -118,12 +127,14 @@ object SparkInternals {
     new DerivingWriterFactory(delegate, attrs, extra)
   }
 
-  /** Normalized filesystem path of a one-file [[FilePartition]]. */
+  /** Normalized filesystem path of a one-file [[FilePartition]] or
+    * [[graft.spark.MorPartition]].
+    */
   def partitionFilePath(p: InputPartition): String = p match {
     case fp: FilePartition =>
       require(fp.files.length == 1, s"expected a single-file partition: $fp")
       fp.files.head.toPath.toUri.getPath
-    case pd: PosDeletePartition => pd.dataFile
+    case mp: graft.spark.MorPartition => mp.dataFile
     case other =>
       throw new IllegalStateException(s"expected FilePartition, got $other")
   }
@@ -202,7 +213,7 @@ object SparkInternals {
             out += FilePartition(i, splits)
             i += 1
           }
-        case pd: PosDeletePartition => out += pd // already single-file
+        case mp: graft.spark.MorPartition => out += mp // already single-file
         case other =>
           throw new IllegalStateException(s"expected FilePartition, got $other")
       }
@@ -216,9 +227,9 @@ object SparkInternals {
     * field set in a different order. A delegated parquet scan returns
     * requested DATA fields in request order but moves Hive-partition
     * fields to the END ([[org.apache.spark.sql.execution.datasources.v2.FileScan]]
-    * `readSchema = readDataSchema ++ readPartitionSchema`); merge-on-read
-    * wrappers do per-ordinal row work, so the delegate's rows are
-    * restored to the requested order here first. Columnar-capable: the
+    * `readSchema = readDataSchema ++ readPartitionSchema`); the
+    * merge-on-read delete reader works per ordinal, so the delegate's
+    * rows are restored to the requested order here first. Columnar-capable: the
     * reorder is a pure column permutation of the delegate's batches.
     */
   def reorderedBatch(delegate: Batch, actual: StructType,
@@ -233,176 +244,6 @@ object SparkInternals {
         new ReorderingReaderFactory(delegate.createReaderFactory(), attrs,
           outAttrs)
     }
-  }
-
-  /** Row-exact residual filtering over a delegated batch: every row is
-    * tested against `cond` (bound to `inputSchema`'s attributes) and
-    * survivors are projected to the first `keepN` columns. This is the
-    * merge-on-read delete read path — parquet's own pushdown is
-    * row-group granular, so exactness must come from here. Columnar
-    * batches stay columnar: [[RowFilteredReaderFactory]] evaluates the
-    * residual per batch and remaps survivors through a
-    * [[SelectedColumnVector]] selection vector; only files with
-    * PENDING deletes pay the evaluation at all, and a
-    * rewrite/compaction removes even that.
-    */
-  def filteredProjectedBatch(delegate: Batch, cond: Expression,
-      inputSchema: StructType, keepN: Int): Batch = {
-    val attrs = inputSchema.fields.toIndexedSeq.map(f =>
-      AttributeReference(f.name, f.dataType, f.nullable)())
-    val bound = cond.transform {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-        attrs.find(_.name == u.nameParts.last).getOrElse(
-          throw new IllegalArgumentException(
-            s"unknown column in residual predicate: ${u.nameParts.mkString(".")}"))
-      case a: AttributeReference =>
-        attrs.find(_.name == a.name).getOrElse(a)
-    }
-    new Batch {
-      override def planInputPartitions(): Array[InputPartition] =
-        delegate.planInputPartitions()
-      override def createReaderFactory(): PartitionReaderFactory =
-        new RowFilteredReaderFactory(delegate.createReaderFactory(), bound,
-          attrs, keepN)
-    }
-  }
-
-  /** The data-schema field name Spark's parquet readers (vectorized
-    * and row-based alike) recognize as the generated row-index column:
-    * a LongType field with this name is filled with each row's
-    * position within its file — correct even under predicate pushdown
-    * and row-group skipping, because positions derive from row-group
-    * metadata, not from counting returned rows. This is the same
-    * mechanism `_metadata.row_index` lowers to in Spark's v1 file
-    * source path.
-    */
-  val RowIndexColumn = "_tmp_metadata_row_index"
-
-  /** NULLABLE on purpose: the parquet readers treat a non-nullable
-    * absent column as an error; a nullable one with this name is
-    * row-index-generated instead.
-    */
-  def rowIndexField: org.apache.spark.sql.types.StructField =
-    org.apache.spark.sql.types.StructField(RowIndexColumn,
-      org.apache.spark.sql.types.LongType)
-
-  /** One equality-delete object as the scan applies it: absolute
-    * object path, its key column names, and where those columns sit in
-    * the read schema (`ordinals`/`types` resolved driver-side so the
-    * executor reader is pure ordinal work).
-    */
-  case class EqDeleteSpec(abs: String, cols: Seq[String],
-      ordinals: Array[Int],
-      types: Array[org.apache.spark.sql.types.DataType])
-
-  /** Apply equality deletes to a delegated batch: every reader in the
-    * group loads the objects' key sets executor-side
-    * ([[graft.format.EqDeleteFiles.keySet]], soft-cached per JVM) and
-    * drops rows whose key tuple matches any of them; survivors project
-    * to the first `keepN` columns (dropping key columns that were read
-    * only for the filter). Partitions pass through untouched so
-    * file-granular wrappers above still see FilePartitions.
-    */
-  def eqDeleteFilteredBatch(delegate: Batch,
-      specs: Seq[EqDeleteSpec],
-      conf: SerializableConfiguration,
-      inputSchema: StructType,
-      keepN: Int,
-      keepMatches: Boolean = false): Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] =
-      delegate.planInputPartitions()
-    override def createReaderFactory(): PartitionReaderFactory =
-      new EqDeleteReaderFactory(delegate.createReaderFactory(), specs.toArray,
-        conf, inputSchema, keepN, keepMatches)
-  }
-
-  /** Apply position deletes to a delegated batch: partitions are
-    * regrouped one-file-per-partition, each covered file's partition
-    * carries the ABS paths of the delete objects referencing it, and
-    * the executor-side reader loads that file's deleted-position set
-    * ([[graft.format.PosDeleteFiles.positionsFor]]) and drops matching
-    * rows by the row-index column at `rixOrdinal`. Survivors project
-    * to the first `keepN` columns (dropping the row-index column when
-    * `_pos` wasn't itself requested). Delete sets load WHERE the data
-    * file is read — a 1000-executor scan never routes positions
-    * through the driver.
-    */
-  def posDeleteFilteredBatch(delegate: Batch,
-      deletesFor: String => Seq[String],
-      conf: SerializableConfiguration,
-      inputSchema: StructType,
-      rixOrdinal: Int,
-      keepN: Int): Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val out = Array.newBuilder[InputPartition]
-      var i = 0
-      delegate.planInputPartitions().foreach {
-        case fp: FilePartition =>
-          fp.files.groupBy(_.filePath).values.foreach { splits =>
-            val single = FilePartition(i, splits)
-            val path = partitionFilePath(single)
-            val dels = deletesFor(path)
-            out += (if (dels.isEmpty) single
-              else PosDeletePartition(single, path, dels.toArray))
-            i += 1
-          }
-        case other =>
-          throw new IllegalStateException(s"expected FilePartition, got $other")
-      }
-      out.result()
-    }
-    override def createReaderFactory(): PartitionReaderFactory =
-      new PosDeleteReaderFactory(delegate.createReaderFactory(), conf,
-        inputSchema, rixOrdinal, keepN)
-  }
-
-  /** Change-capture read of one snapshot's DELETED rows over the
-    * PARENT's files: a row is emitted iff it (a) survived the parent's
-    * own residuals — `cond` (parent predicate keep AND optionally the
-    * new delete predicate) evaluates true and its row-index is in none
-    * of the parent's pending delete sets (`parentDelsFor`) — and (b) is
-    * actually deleted by THIS snapshot: when `newDelsFor` yields
-    * objects for the file, the row-index must be in their union
-    * (position-delta CDC); with no new objects the new predicate inside
-    * `cond` is the deletion test (predicate-delete CDC). Survivors
-    * project to the first `keepN` columns. Partitions are single-file;
-    * delete sets load where the file is read.
-    */
-  def cdcDeleteBatch(delegate: Batch,
-      cond: Expression,
-      parentDelsFor: String => Seq[String],
-      newDelsFor: String => Seq[String],
-      conf: SerializableConfiguration,
-      inputSchema: StructType,
-      rixOrdinal: Int,
-      keepN: Int,
-      requireNewDels: Boolean): Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val out = Array.newBuilder[InputPartition]
-      var i = 0
-      delegate.planInputPartitions().foreach {
-        case fp: FilePartition =>
-          fp.files.groupBy(_.filePath).values.foreach { splits =>
-            val single = FilePartition(i, splits)
-            val path = partitionFilePath(single)
-            val newDels = newDelsFor(path)
-            // position-delta CDC: a referenced-file list can overshoot
-            // (other groups' files); a file no new object names emits
-            // nothing — skip it at planning
-            if (!requireNewDels || newDels.nonEmpty) {
-              out += CdcPartition(single, path,
-                parentDelsFor(path).toArray, newDels.toArray)
-              i += 1
-            }
-          }
-        case other =>
-          throw new IllegalStateException(s"expected FilePartition, got $other")
-      }
-      out.result()
-    }
-    override def createReaderFactory(): PartitionReaderFactory =
-      new CdcDeleteReaderFactory(delegate.createReaderFactory(), cond, conf,
-        inputSchema, rixOrdinal, keepN)
   }
 
   /** Append constant columns (e.g. `_change_type`, the commit snapshot
@@ -625,459 +466,6 @@ private class DispatchingReaderFactory(
       : PartitionReader[ColumnarBatch] = {
     val t = p.asInstanceOf[TaggedPartition]
     factories(t.idx).createColumnarReader(t.inner)
-  }
-}
-
-/** Filters rows by a bound predicate and projects survivors to the
-  * first `keepN` attributes (predicate-only columns are read but not
-  * returned).
-  */
-private class RowFilteredReaderFactory(
-    delegate: PartitionReaderFactory,
-    cond: Expression,
-    attrs: IndexedSeq[AttributeReference],
-    keepN: Int) extends PartitionReaderFactory {
-
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    delegate.supportColumnarReads(p)
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] = {
-    val inner = delegate.createColumnarReader(p)
-    val pred = org.apache.spark.sql.catalyst.expressions.Predicate
-      .create(cond, attrs)
-    new PartitionReader[ColumnarBatch] {
-      private var batch: ColumnarBatch = _
-      override def next(): Boolean = {
-        while (inner.next()) {
-          val b = inner.get()
-          val total = b.numRows()
-          val sel = new Array[Int](total)
-          var n = 0
-          var i = 0
-          while (i < total) {
-            if (pred.eval(b.getRow(i))) { sel(n) = i; n += 1 }
-            i += 1
-          }
-          if (n > 0) {
-            batch =
-              if (n == total) SelectedColumnVector.project(b, keepN)
-              else SelectedColumnVector.select(b,
-                java.util.Arrays.copyOf(sel, n), n, keepN)
-            return true
-          }
-        }
-        false
-      }
-      override def get(): ColumnarBatch = batch
-      override def close(): Unit = inner.close()
-    }
-  }
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val inner = delegate.createReader(p)
-    val pred = org.apache.spark.sql.catalyst.expressions.Predicate
-      .create(cond, attrs)
-    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(attrs.take(keepN), attrs)
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        while (inner.next()) {
-          val r = inner.get()
-          if (pred.eval(r)) { row = r; return true }
-        }
-        false
-      }
-      override def get(): InternalRow = proj(row)
-      override def close(): Unit = inner.close()
-    }
-  }
-}
-
-/** One file's partition in a change-capture delete read: the data file
-  * plus the PARENT's delete objects referencing it (rows already gone
-  * before the change) and the NEW snapshot's objects (the rows being
-  * deleted — what CDC emits).
-  */
-case class CdcPartition(inner: FilePartition, dataFile: String,
-    parentDels: Array[String], newDels: Array[String]) extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-/** Emits exactly the rows [[SparkInternals.cdcDeleteBatch]] specifies.
-  * Columnar-capable: survivors remap through a selection-vector view
-  * ([[SelectedColumnVector]]) like the merge-on-read scan factories,
-  * so deriving deleted rows for a change feed stays vectorized.
-  */
-private class CdcDeleteReaderFactory(
-    delegate: PartitionReaderFactory,
-    cond: Expression,
-    conf: SerializableConfiguration,
-    inputSchema: StructType,
-    rixOrdinal: Int,
-    keepN: Int) extends PartitionReaderFactory {
-
-  private def innerOf(p: InputPartition): InputPartition = p match {
-    case cp: CdcPartition => cp.inner
-    case other => other
-  }
-
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    delegate.supportColumnarReads(innerOf(p))
-
-  private def deleteSets(cp: CdcPartition)
-      : (java.util.HashSet[java.lang.Long], java.util.HashSet[java.lang.Long]) = (
-    if (cp.parentDels.isEmpty) null
-    else graft.format.PosDeleteFiles.positionsFor(
-      cp.parentDels.toSeq, cp.dataFile, conf.value),
-    if (cp.newDels.isEmpty) null
-    else graft.format.PosDeleteFiles.positionsFor(
-      cp.newDels.toSeq, cp.dataFile, conf.value))
-
-  private def attrs = inputSchema.fields.toIndexedSeq.map(f =>
-    AttributeReference(f.name, f.dataType, f.nullable)())
-
-  /** cond was authored against caller-side attributes (serialized by
-    * value) — rebind by NAME to this reader's attrs before binding by
-    * ordinal.
-    */
-  private def boundPred(as: IndexedSeq[AttributeReference])
-      : org.apache.spark.sql.catalyst.expressions.BasePredicate = {
-    val bound = cond.transform {
-      case a: AttributeReference => as.find(_.name == a.name).getOrElse(a)
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-        as.find(_.name == u.nameParts.last).getOrElse(
-          throw new IllegalArgumentException(
-            s"unknown column in change predicate: ${u.nameParts.mkString(".")}"))
-    }
-    org.apache.spark.sql.catalyst.expressions.Predicate.create(bound, as)
-  }
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] = {
-    val cp = p.asInstanceOf[CdcPartition]
-    val inner = delegate.createColumnarReader(cp.inner)
-    val (parentSet, newSet) = deleteSets(cp)
-    val pred = boundPred(attrs)
-    new PartitionReader[ColumnarBatch] {
-      private var batch: ColumnarBatch = _
-      override def next(): Boolean = {
-        while (inner.next()) {
-          val b = inner.get()
-          val total = b.numRows()
-          val rixCol = b.column(rixOrdinal)
-          val sel = new Array[Int](total)
-          var n = 0
-          var i = 0
-          while (i < total) {
-            val rix = rixCol.getLong(i)
-            if ((parentSet == null || !parentSet.contains(rix)) &&
-                (newSet == null || newSet.contains(rix)) &&
-                pred.eval(b.getRow(i))) {
-              sel(n) = i; n += 1
-            }
-            i += 1
-          }
-          if (n > 0) {
-            batch =
-              if (n == total) SelectedColumnVector.project(b, keepN)
-              else SelectedColumnVector.select(b,
-                java.util.Arrays.copyOf(sel, n), n, keepN)
-            return true
-          } // nothing deleted in this batch: keep draining the delegate
-        }
-        false
-      }
-      override def get(): ColumnarBatch = batch
-      override def close(): Unit = inner.close()
-    }
-  }
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val cp = p.asInstanceOf[CdcPartition]
-    val inner = delegate.createReader(cp.inner)
-    val (parentSet, newSet) = deleteSets(cp)
-    val as = attrs
-    val pred = boundPred(as)
-    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(as.take(keepN), as)
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        while (inner.next()) {
-          val r = inner.get()
-          val rix = r.getLong(rixOrdinal)
-          if (pred.eval(r) &&
-              (parentSet == null || !parentSet.contains(rix)) &&
-              (newSet == null || newSet.contains(rix))) {
-            row = r; return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = proj(row)
-      override def close(): Unit = inner.close()
-    }
-  }
-}
-
-/** One covered file's partition in a position-delete read: the single
-  * data file plus the delete objects that reference it.
-  */
-case class PosDeletePartition(inner: FilePartition, dataFile: String,
-    deleteFiles: Array[String]) extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-/** Drops rows whose row-index is in the partition's deleted-position
-  * set; uncovered partitions pass through (minus the projection).
-  * Files with PENDING position deletes keep the COLUMNAR read when the
-  * delegate offers one — survivors remap through a selection-vector
-  * view ([[SelectedColumnVector]]); a rewrite/compaction returns them
-  * to the plain vectorized path.
-  */
-private class PosDeleteReaderFactory(
-    delegate: PartitionReaderFactory,
-    conf: SerializableConfiguration,
-    inputSchema: StructType,
-    rixOrdinal: Int,
-    keepN: Int) extends PartitionReaderFactory {
-
-  private def innerOf(p: InputPartition): InputPartition = p match {
-    case pd: PosDeletePartition => pd.inner
-    case other => other
-  }
-
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    delegate.supportColumnarReads(innerOf(p))
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] = {
-    val (inner, dels) = p match {
-      case pd: PosDeletePartition =>
-        (delegate.createColumnarReader(pd.inner),
-          graft.format.PosDeleteFiles.positionsFor(
-            pd.deleteFiles.toSeq, pd.dataFile, conf.value))
-      case other => (delegate.createColumnarReader(other), null)
-    }
-    new PartitionReader[ColumnarBatch] {
-      private var batch: ColumnarBatch = _
-      override def next(): Boolean = {
-        while (inner.next()) {
-          val b = inner.get()
-          if (dels == null) {
-            batch = SelectedColumnVector.project(b, keepN)
-            return true
-          }
-          val total = b.numRows()
-          val rix = b.column(rixOrdinal)
-          val sel = new Array[Int](total)
-          var n = 0
-          var i = 0
-          while (i < total) {
-            if (!dels.contains(rix.getLong(i))) { sel(n) = i; n += 1 }
-            i += 1
-          }
-          if (n > 0) {
-            batch =
-              if (n == total) SelectedColumnVector.project(b, keepN)
-              else SelectedColumnVector.select(b,
-                java.util.Arrays.copyOf(sel, n), n, keepN)
-            return true
-          } // a fully-deleted batch: keep draining the delegate
-        }
-        false
-      }
-      override def get(): ColumnarBatch = batch
-      override def close(): Unit = inner.close()
-    }
-  }
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val (inner, dels) = p match {
-      case pd: PosDeletePartition =>
-        (delegate.createReader(pd.inner),
-          graft.format.PosDeleteFiles.positionsFor(
-            pd.deleteFiles.toSeq, pd.dataFile, conf.value))
-      case other => (delegate.createReader(other), null)
-    }
-    val attrs = inputSchema.fields.toIndexedSeq.map(f =>
-      AttributeReference(f.name, f.dataType, f.nullable)())
-    val proj =
-      if (keepN == attrs.length) null
-      else org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(attrs.take(keepN), attrs)
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        while (inner.next()) {
-          val r = inner.get()
-          if (dels == null || !dels.contains(r.getLong(rixOrdinal))) {
-            row = r; return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = if (proj == null) row else proj(row)
-      override def close(): Unit = inner.close()
-    }
-  }
-}
-
-/** A [[ColumnVector]] view remapping row ids through a selection array
-  * (the surviving row indices of a merge-on-read filter): `get*(i)`
-  * reads `child.get*(sel(i))`. Children wrap lazily with the SAME
-  * selection, so nested structs/arrays resolve correctly. The child
-  * vectors stay owned by the delegate batch — `close()` is a no-op —
-  * and a new view costs one small object per batch, never a copy of
-  * the data.
-  */
-private class SelectedColumnVector(
-    child: ColumnVector,
-    sel: Array[Int]) extends ColumnVector(child.dataType()) {
-  private var kids: Array[ColumnVector] = _
-
-  override def close(): Unit = () // vectors belong to the delegate batch
-  override def hasNull: Boolean = child.hasNull
-  override def numNulls: Int = child.numNulls // upper bound — per-row
-  //                                             isNullAt is authoritative
-  override def isNullAt(i: Int): Boolean = child.isNullAt(sel(i))
-  override def getBoolean(i: Int): Boolean = child.getBoolean(sel(i))
-  override def getByte(i: Int): Byte = child.getByte(sel(i))
-  override def getShort(i: Int): Short = child.getShort(sel(i))
-  override def getInt(i: Int): Int = child.getInt(sel(i))
-  override def getLong(i: Int): Long = child.getLong(sel(i))
-  override def getFloat(i: Int): Float = child.getFloat(sel(i))
-  override def getDouble(i: Int): Double = child.getDouble(sel(i))
-  override def getDecimal(i: Int, p: Int, s: Int)
-      : org.apache.spark.sql.types.Decimal = child.getDecimal(sel(i), p, s)
-  override def getUTF8String(i: Int): UTF8String =
-    child.getUTF8String(sel(i))
-  override def getBinary(i: Int): Array[Byte] = child.getBinary(sel(i))
-  override def getArray(i: Int): org.apache.spark.sql.vectorized.ColumnarArray =
-    child.getArray(sel(i))
-  override def getMap(i: Int): org.apache.spark.sql.vectorized.ColumnarMap =
-    child.getMap(sel(i))
-  override def getChild(ordinal: Int): ColumnVector = {
-    if (kids == null) kids = new Array[ColumnVector](ordinal + 1)
-    else if (kids.length <= ordinal)
-      kids = java.util.Arrays.copyOf(kids, ordinal + 1)
-    if (kids(ordinal) == null)
-      kids(ordinal) = new SelectedColumnVector(child.getChild(ordinal), sel)
-    kids(ordinal)
-  }
-}
-
-private object SelectedColumnVector {
-  /** The delegate batch filtered to `sel`'s first `n` rows and
-    * projected to its first `keepN` columns — a zero-copy view.
-    */
-  def select(b: ColumnarBatch, sel: Array[Int], n: Int,
-      keepN: Int): ColumnarBatch =
-    new ColumnarBatch(Array.tabulate[ColumnVector](keepN)(i =>
-      new SelectedColumnVector(b.column(i), sel)), n)
-
-  /** The delegate batch projected to its first `keepN` columns. */
-  def project(b: ColumnarBatch, keepN: Int): ColumnarBatch =
-    if (keepN == b.numCols) b
-    else new ColumnarBatch(Array.tabulate[ColumnVector](keepN)(b.column),
-      b.numRows())
-}
-
-/** Drops rows whose key tuple is in any of the partition's equality-
-  * delete sets. Files with PENDING equality deletes keep the COLUMNAR
-  * read when the delegate offers one: surviving rows remap through a
-  * selection-vector view ([[SelectedColumnVector]]) instead of
-  * dropping to row-at-a-time; compaction still returns them to the
-  * plain vectorized path.
-  */
-private class EqDeleteReaderFactory(
-    delegate: PartitionReaderFactory,
-    specs: Array[SparkInternals.EqDeleteSpec],
-    conf: SerializableConfiguration,
-    inputSchema: StructType,
-    keepN: Int,
-    // false: drop matching rows (the scan's anti filter); true: emit
-    // ONLY matching rows (the CDC semi filter — "which rows died")
-    keepMatches: Boolean = false) extends PartitionReaderFactory {
-
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    delegate.supportColumnarReads(p)
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] = {
-    val inner = delegate.createColumnarReader(p)
-    val sets = specs.map(s => graft.format.EqDeleteFiles.keySet(
-      s.abs, s.cols, s.types.toSeq, conf.value))
-    new PartitionReader[ColumnarBatch] {
-      private var batch: ColumnarBatch = _
-      override def next(): Boolean = {
-        while (inner.next()) {
-          val b = inner.get()
-          val total = b.numRows()
-          val sel = new Array[Int](total)
-          var n = 0
-          var i = 0
-          while (i < total) {
-            val r = b.getRow(i)
-            var hit = false
-            var j = 0
-            while (!hit && j < specs.length) {
-              hit = sets(j).contains(graft.format.EqDeleteFiles.rowKey(
-                r, specs(j).ordinals, specs(j).types))
-              j += 1
-            }
-            if (hit == keepMatches) { sel(n) = i; n += 1 }
-            i += 1
-          }
-          if (n > 0) {
-            batch =
-              if (n == total) SelectedColumnVector.project(b, keepN)
-              else SelectedColumnVector.select(b,
-                java.util.Arrays.copyOf(sel, n), n, keepN)
-            return true
-          } // a fully-deleted batch: keep draining the delegate
-        }
-        false
-      }
-      override def get(): ColumnarBatch = batch
-      override def close(): Unit = inner.close()
-    }
-  }
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val inner = delegate.createReader(p)
-    // loaded at reader creation (executor-side); the per-JVM soft cache
-    // in EqDeleteFiles makes this one parquet read per executor, not
-    // per task
-    val sets = specs.map(s => graft.format.EqDeleteFiles.keySet(
-      s.abs, s.cols, s.types.toSeq, conf.value))
-    val attrs = inputSchema.fields.toIndexedSeq.map(f =>
-      AttributeReference(f.name, f.dataType, f.nullable)())
-    val proj =
-      if (keepN == attrs.length) null
-      else org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(attrs.take(keepN), attrs)
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        while (inner.next()) {
-          val r = inner.get()
-          var hit = false
-          var i = 0
-          while (!hit && i < specs.length) {
-            hit = sets(i).contains(graft.format.EqDeleteFiles.rowKey(
-              r, specs(i).ordinals, specs(i).types))
-            i += 1
-          }
-          if (hit == keepMatches) { row = r; return true }
-        }
-        false
-      }
-      override def get(): InternalRow = if (proj == null) row else proj(row)
-      override def close(): Unit = inner.close()
-    }
   }
 }
 

@@ -73,8 +73,8 @@ class ChangesFeedSpec extends AnyFunSuite {
   test("delete-derivation reads stay columnar") {
     // the feed now carries predicate deletes AND position-delta
     // deletes: deriving the deleted rows must not drop the scan to
-    // row-at-a-time (CdcDeleteReaderFactory serves a selection-vector
-    // view, like the merge-on-read scan path)
+    // row-at-a-time (MorDeleteReader serves a selection-vector view,
+    // on the change feed as on the merge-on-read scan path)
     val df = spark.read.table("cf.ns.`t$changes`")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"),
