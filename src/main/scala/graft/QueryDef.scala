@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, expr, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
@@ -18,6 +19,17 @@ object QueryDef {
   /** Load one of the driver-provided tables. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** Free the blocks of a `localCheckpoint()`ed frame now. The
+    * checkpoint is an RDD under the frame's `LogicalRDD`, not a cache
+    * entry, so `df.unpersist()` frees nothing and the blocks stay until
+    * a GC lets `ContextCleaner` find the RDD. Call it only once no lazy
+    * frame is left that still reads the checkpoint.
+    */
+  def releaseCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => df.unpersist()
+  }
 
   /** Epoch-microseconds of a timestamp column, robust to the physical
     * type the driver generated it with: parquet TIMESTAMP(NANOS)

@@ -1,11 +1,13 @@
 package graft.pipeline
 
 import graft.QueryDef
-import graft.QueryDef.table
+import graft.QueryDef.{releaseCheckpoint, table}
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators over `documents` / `embeddings`.
   *
@@ -57,38 +59,87 @@ object Dedup {
     withShingles(table(s, d, "documents").select("doc_id", "text", "n_chars"))
       .select("doc_id", "n_chars", "sh")
 
-  /** Connected components by alternating small-star / large-star
-    * exchanges (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14): each round reshapes the edge set toward a star
-    * forest whose centers are the component minima, converging in
-    * O(log n) rounds REGARDLESS of component diameter — the property
-    * plain label propagation (O(diameter) rounds) lacks, and what
-    * makes the operator safe against adversarial chain-shaped
-    * duplicate clusters at 100 TB. Both stars are a groupBy(min) +
-    * self-join — pure shuffle work, no driver state.
-    *
-    * Input: undirected edges as two long columns. Output:
-    * (`idCol`, `labelCol`) — every vertex labeled with its component's
+  /** Connected components, every vertex labeled with its component's
     * minimum vertex id (minima label themselves).
     *
-    * Convergence is proven by EXACT edge-set equality (count + one-way
-    * except), never assumed: if `maxRounds` (default 64 ≫ log₂ of any
-    * physical edge count) passes without a fixpoint, this THROWS
-    * rather than returning wrong labels.
+    * Two physical plans, picked by the size of the edge set:
+    *  - *Driver path.* A `limit(edgeBudget + 1)` collect brings the
+    *    edges to the driver (one job while the first partition holds
+    *    them all). When they all fit, an exact union-find labels them
+    *    and the labels come back as a local frame: no iteration, no
+    *    convergence to prove. The near-duplicate edge sets of the dd
+    *    family take it (477 clustered docs at sf0.1).
+    *  - *Star path.* Over the budget, alternating small-star /
+    *    large-star exchanges (Kiveris et al., "Connected Components in
+    *    MapReduce and Beyond", SoCC'14): each round reshapes the edge
+    *    set toward a star forest whose centers are the component
+    *    minima, converging in O(log n) rounds REGARDLESS of component
+    *    diameter — the property plain label propagation (O(diameter)
+    *    rounds) lacks, and what keeps the operator safe against
+    *    adversarial chain-shaped duplicate clusters at 100 TB. Both
+    *    stars are a groupBy(min) + self-join; the driver only runs the
+    *    loop and its convergence probe.
+    *
+    * `edgeBudget` (edges) defaults to `spark.sql.autoBroadcastJoinThreshold`
+    * bytes at 16 bytes an edge (~655 k edges at the 10 MB default): an
+    * edge set small enough to broadcast is small enough to collect. A
+    * budget ≤ 0 (the threshold at `-1`) always takes the star path.
+    * The driver path needs long ids; other id types take the star path.
+    *
+    * Input: undirected edges as two columns of the same type. Edges
+    * with a null endpoint are dropped; self-loops add no vertex (a
+    * vertex with only self-loops gets no row); duplicate and reversed
+    * edges are harmless. Output: (`idCol`, `labelCol`), both of the
+    * type of `greatest(aCol, bCol)`, the same schema on either path.
+    *
+    * `maxRounds` bounds the star rounds only. Their convergence is
+    * proven by EXACT edge-set equality, never assumed: if `maxRounds`
+    * (default 64 ≫ log₂ of any physical edge count) passes without a
+    * fixpoint, this THROWS rather than returning wrong labels.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      idCol: String, labelCol: String, maxRounds: Int = 64): DataFrame = {
-    // canonical orientation: (u, v) with u > v, no self-loops, distinct.
+      idCol: String, labelCol: String, maxRounds: Int = 64,
+      edgeBudget: Option[Long] = None): DataFrame = {
+    // canonical orientation: (u, v) with u > v, no self-loops (a null
+    // endpoint makes greatest = least, or both null, so it drops too)
+    val edges = pairs
+      .select(greatest(col(aCol), col(bCol)).as("u"),
+        least(col(aCol), col(bCol)).as("v"))
+      .filter(col("u") =!= col("v"))
+    val budget = edgeBudget.getOrElse(defaultEdgeBudget(pairs.sparkSession))
+    val schema = StructType(Seq(
+      edges.schema("u").copy(name = idCol), edges.schema("v").copy(name = labelCol)))
+    val probe =
+      if (budget <= 0 || schema(idCol).dataType != LongType) None
+      else Some(edges.limit(math.min(budget, Int.MaxValue - 1L).toInt + 1).collect())
+    probe.filter(_.length <= budget) match {
+      case Some(fit) =>
+        val labels = unionFindLabels(fit.map(_.getLong(0)), fit.map(_.getLong(1)))
+        val rows = labels.map { case (id, label) => Row(id, label) }
+        pairs.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
+      case None =>
+        val e = starForest(edges, maxRounds)
+        // (u, v=component min) for every non-root u; roots (the
+        // minima) label themselves. The final round's checkpoint stays
+        // cached — the result is computed from it lazily (callers
+        // materialize then discard).
+        e.select(col("u").as(idCol), col("v").as(labelCol))
+          .union(e.select(col("v").as(idCol), col("v").as(labelCol)).distinct())
+    }
+  }
+
+  /** The star path of [[connectedComponents]]: small-star / large-star
+    * rounds over canonical (u > v) edges until the edge set is a star
+    * forest, (u, v) = (vertex, its component's minimum).
+    */
+  private def starForest(edges: DataFrame, maxRounds: Int): DataFrame = {
     // Each round is (eagerly) localCheckpoint-ed: the star exchanges
     // reference the prior round several times, so carrying raw lineage
     // would grow the logical plan EXPONENTIALLY with rounds — the
     // checkpoint pins the round's result and truncates the plan (a
     // production cluster run would point this at a reliable
     // checkpoint dir; the shape is identical).
-    var e = pairs
-      .select(greatest(col(aCol), col(bCol)).as("u"),
-        least(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+    var e = edges.distinct().localCheckpoint()
 
     // large-star: every neighbor LARGER than u links to
     // min(N(u) ∪ {u}); small-star: every neighbor SMALLER than u
@@ -135,15 +186,43 @@ object Dedup {
         .groupBy("u", "v").agg(sum("_s").as("_d"))
         .filter(col("_d") =!= 0)
         .isEmpty
-      e.unpersist()
+      // `next` is materialized and the probe has run: nothing reads `e`
+      releaseCheckpoint(e)
       e = next
       rounds += 1
     }
-    // star forest: (u, v=component min) for every non-root u; roots
-    // (the minima) label themselves. `e` stays cached — the result is
-    // computed from it lazily (callers materialize then discard).
-    e.select(col("u").as(idCol), col("v").as(labelCol))
-      .union(e.select(col("v").as(idCol), col("v").as(labelCol)).distinct())
+    e
+  }
+
+  /** Edges the driver path of [[connectedComponents]] may collect: the
+    * session's broadcast threshold at 16 bytes (two longs) an edge;
+    * negative when broadcasting is off.
+    */
+  private def defaultEdgeBudget(s: SparkSession): Long = {
+    val bytes = s.sessionState.conf.autoBroadcastJoinThreshold
+    if (bytes < 0) -1L else bytes / 16
+  }
+
+  /** Exact union-find over the edges (us(i), vs(i)): (vertex, minimum
+    * of its component) for every endpoint, in vertex order. Vertices
+    * are ranked by value, a union hangs the larger root under the
+    * smaller, so each root is its component's minimum; path halving
+    * keeps `find` iterative (a chain must not recurse 655 k deep).
+    */
+  private def unionFindLabels(us: Array[Long], vs: Array[Long]): Array[(Long, Long)] = {
+    val ids = (us ++ vs).distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def rank(id: Long) = java.util.Arrays.binarySearch(ids, id)
+    us.indices.foreach { i =>
+      val (a, b) = (find(rank(us(i))), find(rank(vs(i))))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    ids.indices.map(i => ids(i) -> ids(find(i))).toArray
   }
 
   /** Exact jaccard over candidate pairs carrying sorted sh_a/sh_b,
@@ -355,9 +434,11 @@ object Dedup {
         // exact near-dup pairs (dd03), labeling every clustered doc
         // with the smallest doc_id in its component — the step that
         // turns a pair list into "keep one per cluster" decisions.
-        // Small-star/large-star exchange (see connectedComponents):
-        // O(log n) rounds at ANY cluster diameter, exact-equality
-        // convergence proof, throws rather than mislabeling.
+        // connectedComponents labels a broadcast-sized pair set on the
+        // driver with an exact union-find in one job; past that it
+        // runs small-star/large-star rounds (O(log n) at ANY cluster
+        // diameter, exact-equality convergence proof, throws rather
+        // than mislabeling).
         val pairs = defs.find(_.name == "dd03_ngram_jaccard").get.fn(s, d)
           .select(col("doc_a"), col("doc_b")).persist()
         val out = connectedComponents(pairs, "doc_a", "doc_b",
@@ -728,8 +809,9 @@ object Dedup {
         // complete copy, not the smallest id), ties to the smaller
         // doc_id. One broadcast-sized join of the cluster labels back
         // to doc lengths and a per-cluster window (partitions bounded
-        // by cluster size — the star-exchange CC already guarantees
-        // no giant unlabeled component sneaks through unconverged).
+        // by cluster size — dd07's labels are exact on either CC path,
+        // union-find or converged star rounds, so no component reaches
+        // the window split or half-labeled).
         val clusters = defs.find(_.name == "dd07_dup_clusters").get.fn(s, d)
         val lens = table(s, d, "documents").select("doc_id", "n_chars")
         val w = Window.partitionBy("cluster_id")

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.QueryDef
-import graft.QueryDef.table
+import graft.QueryDef.{releaseCheckpoint, table}
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -859,8 +859,9 @@ object TextAnalysis {
         // at substring boundaries, left-to-right non-overlapping —
         // greedy BPE semantics, identical in Spark and DuckDB. Per
         // iteration only the 1-row argmax returns to the driver (the
-        // same driver-loop shape as dd07's convergence checks); the
-        // pair counting stays a distributed weighted aggregation.
+        // same driver-loop shape as the star rounds' convergence probe
+        // in Dedup.connectedComponents); the pair counting stays a
+        // distributed weighted aggregation.
         import org.apache.spark.sql.DataFrame
         val vocab = table(s, d, "documents")
           .select(explode(split(trim(col("text")), "\\s+")).as("w0"))
@@ -887,7 +888,7 @@ object TextAnalysis {
           segs = segs.withColumn("seg",
               expr(s"trim(replace(concat(' ', seg, ' '), ' $pair ', ' $merged '))"))
             .localCheckpoint() // truncate the per-iteration plan lineage
-          prev.unpersist() // superseded checkpoint leaves the cache
+          releaseCheckpoint(prev) // superseded: the new one is materialized
           (k.toLong, pair, merged, n)
         }
         import s.implicits._
@@ -961,7 +962,7 @@ object TextAnalysis {
           segs = segs.withColumn("seg",
               expr(s"trim(replace(concat(' ', seg, ' '), ' $pair ', ' $merged '))"))
             .localCheckpoint()
-          prev.unpersist() // superseded checkpoint leaves the cache
+          releaseCheckpoint(prev) // superseded: the new one is materialized
         }
         val tok = segs.select(col("word"),
           size(split(col("seg"), " ")).cast("bigint").as("n_tok"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.QueryDef.table
+import graft.QueryDef.{releaseCheckpoint, table}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -946,11 +946,11 @@ object Advanced {
         //     and decimal-sums. DECIMAL(18,10) holds every value
         //     (cb ≤ 1, Σcb ≤ 1) in Spark's compact-Long decimal path.
         //  2. Checkpoint only the LAST iteration: the final checkpoint
-        //     is per-node-small and lets every edge-scale frame
-        //     unpersist before return, so the sf1 back-to-back leak
-        //     discipline holds; it stays cached for the caller's
+        //     is per-node-small and lets every edge-scale checkpoint
+        //     be released before return (releaseCheckpoint: a plain
+        //     unpersist frees no checkpoint), so the sf1 back-to-back
+        //     leak discipline holds; it stays cached for the caller's
         //     collect. No intermediate checkpoints (cadence A/B below).
-        var lastCp: org.apache.spark.sql.DataFrame = null
         (1 to 5).foreach { i =>
           val cb = rank
             .join(if (broadcastable) broadcast(degB) else degB,
@@ -971,16 +971,12 @@ object Advanced {
           // intermediate materializations: each checkpoint pays its own
           // jobs + block-manager writes while AQE already runs the
           // chain stage-by-stage. Lineage stays bounded at 5 joins.
-          rank = if (i == 5) {
-            val cp = next.localCheckpoint()
-            if (lastCp != null) lastCp.unpersist()
-            lastCp = cp
-            cp
-          } else next
+          rank = if (i == 5) next.localCheckpoint() else next
         }
-        e0.unpersist()
-        deg.unpersist()
-        if (!broadcastable) edgesIter.unpersist()
+        // the final checkpoint is materialized and reads none of these
+        releaseCheckpoint(e0)
+        releaseCheckpoint(deg)
+        if (!broadcastable) releaseCheckpoint(edgesIter)
         rank.select(col("node"),
             when(pmod(col("node"), lit(10)) === 1, "customer")
               .otherwise("supplier").as("kind"),

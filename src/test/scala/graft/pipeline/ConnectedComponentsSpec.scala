@@ -1,21 +1,32 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** dd07's clustering core: small-star/large-star connected components
-  * must converge in O(log n) rounds even on adversarial chain-shaped
-  * components — the case plain label propagation (bounded rounds)
-  * would silently mislabel.
+/** dd07's clustering core. Under the edge budget the labels come from
+  * one collect and a driver union-find; over it (budget pinned to 0
+  * here) small-star/large-star connected components must converge in
+  * O(log n) rounds even on adversarial chain-shaped components — the
+  * case plain label propagation (bounded rounds) would silently
+  * mislabel. Both paths must give the same labels and the same schema.
   */
 class ConnectedComponentsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.Verify.sessionBuilder("4").getOrCreate()
 
-  private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  /** Edge budgets that pin each path: the session default (driver
+    * union-find for every graph here) and 0 (star rounds).
+    */
+  private val paths = Seq("driver" -> None, "star" -> Some(0L))
+
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def cc(edges: Seq[(Long, Long)], budget: Option[Long]): Map[Long, Long] = {
     import spark.implicits._
-    Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b", "id", "label")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    labels(Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b", "id", "label",
+      edgeBudget = budget))
   }
 
   /** Reference labeling: driver-side union-find. */
@@ -36,10 +47,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // 0-1-2-…-40: diameter 40; label propagation capped at 20 rounds
     // would leave the tail wrongly labeled — star exchanges must not
     val edges = (0L until 40L).map(i => (i, i + 1))
-    val labels = cc(edges)
-    assert(labels.size == 41)
-    assert(labels.values.forall(_ == 0L), s"non-min labels: ${
-      labels.filter(_._2 != 0L)}")
+    for ((path, budget) <- paths) withClue(s"$path path: ") {
+      val labels = cc(edges, budget)
+      assert(labels.size == 41)
+      assert(labels.values.forall(_ == 0L), s"non-min labels: ${
+        labels.filter(_._2 != 0L)}")
+    }
   }
 
   test("mixed components match union-find") {
@@ -49,7 +62,37 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       (100, 50), (100, 60), (100, 70),        // star, min 50
       (201, 202), (202, 203), (203, 201), (203, 204), // triangle + tail
       (1000, 999))
-    assert(cc(edges) == unionFind(edges))
+    for ((path, budget) <- paths) withClue(s"$path path: ") {
+      assert(cc(edges, budget) == unionFind(edges))
+    }
+  }
+
+  test("seeded random graphs: both paths equal union-find, with equal schemas") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261017L)
+    (1 to 5).foreach { g =>
+      val n = 30 + rnd.nextInt(60)
+      val raw = Seq.fill(n)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      val edges = raw ++
+        raw.take(5) ++                             // duplicates
+        raw.take(5).map(_.swap) ++                 // reversed
+        Seq((7L, 7L), (500L + g, 500L + g))        // self-loops, one self-only
+      val withNull: Seq[(Option[Long], Option[Long])] =
+        edges.map { case (a, b) => (Some(a), Some(b)) } ++
+          Seq((Some(900L + g), None), (None, None))
+      val df = withNull.toDF("a", "b")
+      val out = paths.map { case (_, budget) =>
+        Dedup.connectedComponents(df, "a", "b", "id", "label", edgeBudget = budget)
+      }
+      // self-loops and null endpoints add no vertex and join nothing
+      val expected = unionFind(edges.filter { case (a, b) => a != b })
+      for (((path, _), o) <- paths.zip(out)) withClue(s"graph $g, $path path: ") {
+        assert(labels(o) == expected)
+        assert(!labels(o).contains(500L + g) && !labels(o).contains(900L + g))
+      }
+      assert(out.map(_.schema).distinct.size == 1,
+        s"schemas differ: ${out.map(_.schema.simpleString)}")
+    }
   }
 
   test("non-convergence inside the round budget throws, never mislabels") {
@@ -57,7 +100,68 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val edges = (0L until 16L).map(i => (i, i + 1)).toDF("a", "b")
     intercept[IllegalStateException] {
       Dedup.connectedComponents(edges, "a", "b", "id", "label",
-        maxRounds = 1).collect()
+        maxRounds = 1, edgeBudget = Some(0L)).collect()
     }
+  }
+
+  /** Jobs submitted by `body` on this thread, counted by a listener
+    * that sees each job's local properties. A tagged sentinel job after
+    * `body` flushes the asynchronous listener bus: once its start
+    * arrives, every earlier job start has too.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.test.cc"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      body
+      sc.setLocalProperty(tag, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!seen.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains("sentinel"), "listener bus did not drain")
+      seen.toArray.count(_ == "body")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("under the budget the chain is labeled in at most 2 jobs; the star path takes > 10") {
+    import spark.implicits._
+    // an RDD-backed frame, so the probe is a real job (a local Seq
+    // would fold into the plan and run none)
+    val chain = spark.sparkContext.parallelize((0L until 40L).map(i => (i, i + 1)), 2)
+      .toDF("a", "b")
+    def run(budget: Option[Long]): Unit = {
+      val l = labels(Dedup.connectedComponents(chain, "a", "b", "id", "label",
+        edgeBudget = budget))
+      assert(l.size == 41 && l.values.forall(_ == 0L))
+    }
+    val driverJobs = jobsOf(run(None))
+    val starJobs = jobsOf(run(Some(0L)))
+    assert(driverJobs >= 1 && driverJobs <= 2, s"driver path ran $driverJobs jobs")
+    assert(starJobs > 10, s"star path ran $starJobs jobs")
+  }
+
+  test("the star path leaves at most its final round's checkpoint cached") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def cached() = sc.getRDDStorageInfo.map(_.id).toSet
+    val before = cached()
+    val edges = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
+    val l = labels(Dedup.connectedComponents(edges, "a", "b", "id", "label",
+      edgeBudget = Some(0L)))
+    assert(l.size == 41)
+    val extra = cached() -- before
+    assert(extra.size <= 1, s"superseded round checkpoints still cached: $extra")
   }
 }
