@@ -24,11 +24,13 @@ object QueryDef {
     * checkpoint is an RDD under the frame's `LogicalRDD`, not a cache
     * entry, so `df.unpersist()` frees nothing and the blocks stay until
     * a GC lets `ContextCleaner` find the RDD. Call it only once no lazy
-    * frame is left that still reads the checkpoint.
+    * frame is left that still reads the checkpoint. Any other frame
+    * is a caller error and throws.
     */
   def releaseCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ => df.unpersist()
+    case p => throw new IllegalArgumentException(
+      s"releaseCheckpoint: not a localCheckpoint()ed frame: ${p.nodeName}")
   }
 
   /** Epoch-microseconds of a timestamp column, robust to the physical

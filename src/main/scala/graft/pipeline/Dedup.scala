@@ -63,7 +63,7 @@ object Dedup {
     * minimum vertex id (minima label themselves).
     *
     * Two physical plans, picked by the size of the edge set:
-    *  - *Driver path.* A `limit(edgeBudget + 1)` collect brings the
+    *  - *Driver path.* A `limit(budget + 1)` collect brings the
     *    edges to the driver (one job while the first partition holds
     *    them all). When they all fit, an exact union-find labels them
     *    and the labels come back as a local frame: no iteration, no
@@ -80,11 +80,15 @@ object Dedup {
     *    stars are a groupBy(min) + self-join; the driver only runs the
     *    loop and its convergence probe.
     *
-    * `edgeBudget` (edges) defaults to `spark.sql.autoBroadcastJoinThreshold`
-    * bytes at 16 bytes an edge (~655 k edges at the 10 MB default): an
-    * edge set small enough to broadcast is small enough to collect. A
-    * budget ≤ 0 (the threshold at `-1`) always takes the star path.
+    * The budget (edges) is the session's
+    * `spark.sql.autoBroadcastJoinThreshold` at [[DriverBytesPerEdge]]
+    * (10 240 edges at the 10 MB default): the driver may hold what a
+    * broadcast may. A threshold of `-1` always takes the star path.
     * The driver path needs long ids; other id types take the star path.
+    * Over the budget the probe's `budget + 1` rows are thrown away
+    * before the star rounds run: one extra job and ≤ 10 241 rows
+    * (≤ 160 KiB of longs) at the default, small beside a star round
+    * over that many edges.
     *
     * Input: undirected edges as two columns of the same type. Edges
     * with a null endpoint are dropped; self-loops add no vertex (a
@@ -98,15 +102,14 @@ object Dedup {
     * fixpoint, this THROWS rather than returning wrong labels.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      idCol: String, labelCol: String, maxRounds: Int = 64,
-      edgeBudget: Option[Long] = None): DataFrame = {
+      idCol: String, labelCol: String, maxRounds: Int = 64): DataFrame = {
     // canonical orientation: (u, v) with u > v, no self-loops (a null
     // endpoint makes greatest = least, or both null, so it drops too)
     val edges = pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
-    val budget = edgeBudget.getOrElse(defaultEdgeBudget(pairs.sparkSession))
+    val budget = edgeBudget(pairs.sparkSession)
     val schema = StructType(Seq(
       edges.schema("u").copy(name = idCol), edges.schema("v").copy(name = labelCol)))
     val probe =
@@ -194,23 +197,39 @@ object Dedup {
     e
   }
 
+  /** Driver heap the driver path of [[connectedComponents]] costs per
+    * edge, rounded up from a measurement (local[4], chains of 10
+    * vertices, 650 k edges): ~350 B an edge stays held by the returned
+    * local frame (~310 B an output row, and a vertex set may have two
+    * rows an edge), ~1.35 KB an edge is allocated on the way. The two
+    * longs themselves are 16 B.
+    */
+  private val DriverBytesPerEdge = 1024L
+
   /** Edges the driver path of [[connectedComponents]] may collect: the
-    * session's broadcast threshold at 16 bytes (two longs) an edge;
+    * session's broadcast threshold over [[DriverBytesPerEdge]];
     * negative when broadcasting is off.
     */
-  private def defaultEdgeBudget(s: SparkSession): Long = {
+  private def edgeBudget(s: SparkSession): Long = {
     val bytes = s.sessionState.conf.autoBroadcastJoinThreshold
-    if (bytes < 0) -1L else bytes / 16
+    if (bytes < 0) -1L else bytes / DriverBytesPerEdge
   }
 
   /** Exact union-find over the edges (us(i), vs(i)): (vertex, minimum
     * of its component) for every endpoint, in vertex order. Vertices
     * are ranked by value, a union hangs the larger root under the
     * smaller, so each root is its component's minimum; path halving
-    * keeps `find` iterative (a chain must not recurse 655 k deep).
+    * keeps `find` iterative (a chain must not recurse budget-deep).
     */
   private def unionFindLabels(us: Array[Long], vs: Array[Long]): Array[(Long, Long)] = {
-    val ids = (us ++ vs).distinct.sorted
+    // sort + unique on the primitive array (`distinct` would box)
+    val ids = {
+      val all = us ++ vs
+      java.util.Arrays.sort(all)
+      var n = 0
+      all.foreach { id => if (n == 0 || all(n - 1) != id) { all(n) = id; n += 1 } }
+      java.util.Arrays.copyOf(all, n)
+    }
     val parent = Array.range(0, ids.length)
     def find(x0: Int): Int = {
       var x = x0

@@ -5,28 +5,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** dd07's clustering core. Under the edge budget the labels come from
-  * one collect and a driver union-find; over it (budget pinned to 0
-  * here) small-star/large-star connected components must converge in
-  * O(log n) rounds even on adversarial chain-shaped components — the
-  * case plain label propagation (bounded rounds) would silently
-  * mislabel. Both paths must give the same labels and the same schema.
+  * one collect and a driver union-find; over it (the broadcast
+  * threshold pinned to -1 here) small-star/large-star connected
+  * components must converge in O(log n) rounds even on adversarial
+  * chain-shaped components — the case plain label propagation
+  * (bounded rounds) would silently mislabel. Both paths must give the
+  * same labels and the same schema.
   */
 class ConnectedComponentsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.Verify.sessionBuilder("4").getOrCreate()
 
-  /** Edge budgets that pin each path: the session default (driver
-    * union-find for every graph here) and 0 (star rounds).
+  /** Broadcast thresholds that pin each path: 10 MB (a budget of
+    * 10 240 edges, so the driver union-find for every graph here) and
+    * -1 (star rounds).
     */
-  private val paths = Seq("driver" -> None, "star" -> Some(0L))
+  private val paths = Seq("driver" -> "10485760", "star" -> "-1")
+
+  /** Runs `body` with the edge budget's conf set to `threshold`. The
+    * suite may share its session with another spec that set the conf,
+    * so it is pinned for the body and restored after.
+    */
+  private def onPath[T](threshold: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, threshold)
+    try body
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   private def labels(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  private def cc(edges: Seq[(Long, Long)], budget: Option[Long]): Map[Long, Long] = {
+  private def cc(edges: Seq[(Long, Long)], threshold: String): Map[Long, Long] = {
     import spark.implicits._
-    labels(Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b", "id", "label",
-      edgeBudget = budget))
+    onPath(threshold) {
+      labels(Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b", "id", "label"))
+    }
   }
 
   /** Reference labeling: driver-side union-find. */
@@ -47,8 +62,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // 0-1-2-…-40: diameter 40; label propagation capped at 20 rounds
     // would leave the tail wrongly labeled — star exchanges must not
     val edges = (0L until 40L).map(i => (i, i + 1))
-    for ((path, budget) <- paths) withClue(s"$path path: ") {
-      val labels = cc(edges, budget)
+    for ((path, threshold) <- paths) withClue(s"$path path: ") {
+      val labels = cc(edges, threshold)
       assert(labels.size == 41)
       assert(labels.values.forall(_ == 0L), s"non-min labels: ${
         labels.filter(_._2 != 0L)}")
@@ -62,8 +77,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       (100, 50), (100, 60), (100, 70),        // star, min 50
       (201, 202), (202, 203), (203, 201), (203, 204), // triangle + tail
       (1000, 999))
-    for ((path, budget) <- paths) withClue(s"$path path: ") {
-      assert(cc(edges, budget) == unionFind(edges))
+    for ((path, threshold) <- paths) withClue(s"$path path: ") {
+      assert(cc(edges, threshold) == unionFind(edges))
     }
   }
 
@@ -81,17 +96,20 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         edges.map { case (a, b) => (Some(a), Some(b)) } ++
           Seq((Some(900L + g), None), (None, None))
       val df = withNull.toDF("a", "b")
-      val out = paths.map { case (_, budget) =>
-        Dedup.connectedComponents(df, "a", "b", "id", "label", edgeBudget = budget)
+      val out = paths.map { case (_, threshold) =>
+        onPath(threshold) {
+          val o = Dedup.connectedComponents(df, "a", "b", "id", "label")
+          (labels(o), o.schema)
+        }
       }
       // self-loops and null endpoints add no vertex and join nothing
       val expected = unionFind(edges.filter { case (a, b) => a != b })
-      for (((path, _), o) <- paths.zip(out)) withClue(s"graph $g, $path path: ") {
-        assert(labels(o) == expected)
-        assert(!labels(o).contains(500L + g) && !labels(o).contains(900L + g))
+      for (((path, _), (l, _)) <- paths.zip(out)) withClue(s"graph $g, $path path: ") {
+        assert(l == expected)
+        assert(!l.contains(500L + g) && !l.contains(900L + g))
       }
-      assert(out.map(_.schema).distinct.size == 1,
-        s"schemas differ: ${out.map(_.schema.simpleString)}")
+      assert(out.map(_._2).distinct.size == 1,
+        s"schemas differ: ${out.map(_._2.simpleString)}")
     }
   }
 
@@ -99,8 +117,10 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = (0L until 16L).map(i => (i, i + 1)).toDF("a", "b")
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(edges, "a", "b", "id", "label",
-        maxRounds = 1, edgeBudget = Some(0L)).collect()
+      onPath("-1") {
+        Dedup.connectedComponents(edges, "a", "b", "id", "label",
+          maxRounds = 1).collect()
+      }
     }
   }
 
@@ -141,13 +161,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // would fold into the plan and run none)
     val chain = spark.sparkContext.parallelize((0L until 40L).map(i => (i, i + 1)), 2)
       .toDF("a", "b")
-    def run(budget: Option[Long]): Unit = {
-      val l = labels(Dedup.connectedComponents(chain, "a", "b", "id", "label",
-        edgeBudget = budget))
+    def run(threshold: String): Unit = onPath(threshold) {
+      val l = labels(Dedup.connectedComponents(chain, "a", "b", "id", "label"))
       assert(l.size == 41 && l.values.forall(_ == 0L))
     }
-    val driverJobs = jobsOf(run(None))
-    val starJobs = jobsOf(run(Some(0L)))
+    val driverJobs = jobsOf(run("10485760"))
+    val starJobs = jobsOf(run("-1"))
     assert(driverJobs >= 1 && driverJobs <= 2, s"driver path ran $driverJobs jobs")
     assert(starJobs > 10, s"star path ran $starJobs jobs")
   }
@@ -158,8 +177,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     def cached() = sc.getRDDStorageInfo.map(_.id).toSet
     val before = cached()
     val edges = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
-    val l = labels(Dedup.connectedComponents(edges, "a", "b", "id", "label",
-      edgeBudget = Some(0L)))
+    val l = onPath("-1") {
+      labels(Dedup.connectedComponents(edges, "a", "b", "id", "label"))
+    }
     assert(l.size == 41)
     val extra = cached() -- before
     assert(extra.size <= 1, s"superseded round checkpoints still cached: $extra")
