@@ -453,9 +453,10 @@ object Dedup {
         // exact near-dup pairs (dd03), labeling every clustered doc
         // with the smallest doc_id in its component — the step that
         // turns a pair list into "keep one per cluster" decisions.
-        // connectedComponents labels a broadcast-sized pair set on the
-        // driver with an exact union-find in one job; past that it
-        // runs small-star/large-star rounds (O(log n) at ANY cluster
+        // connectedComponents labels a pair set inside its driver
+        // budget (the broadcast threshold at 1 KiB an edge) with an
+        // exact union-find in one job; past that it runs
+        // small-star/large-star rounds (O(log n) at ANY cluster
         // diameter, exact-equality convergence proof, throws rather
         // than mislabeling).
         val pairs = defs.find(_.name == "dd03_ngram_jaccard").get.fn(s, d)
