@@ -35,16 +35,22 @@ object Graft {
     TreeOps.createEmptyRoot(storage, defPath)
   }
 
-  def catalogDef(storage: StorageOps, root: TreeRoot): CatalogDef = {
-    val cd = Json.read(storage.read(root.catalogDefPath), classOf[CatalogDef])
-    // pre-tag (round-1) files carry no formatVersion → layout 1;
-    // anything beyond what this reader implements must be refused,
-    // not misread (docs/FORMAT_COMPAT.md)
-    val v = if (cd.formatVersion == 0) 1 else cd.formatVersion
-    require(v <= CatalogDef.FormatVersion,
-      s"catalog format version $v is newer than supported ${CatalogDef.FormatVersion}")
-    cd.copy(formatVersion = v)
-  }
+  /** The root's catalog definition, read and parsed once per
+    * [[TreeRoot]] (memoized on it; the def file is write-once).
+    */
+  def catalogDef(storage: StorageOps, root: TreeRoot): CatalogDef =
+    root.catalogDefMemo.getOrElse {
+      val cd = Json.read(storage.read(root.catalogDefPath), classOf[CatalogDef])
+      // pre-tag (round-1) files carry no formatVersion → layout 1;
+      // anything beyond what this reader implements must be refused,
+      // not misread (docs/FORMAT_COMPAT.md)
+      val v = if (cd.formatVersion == 0) 1 else cd.formatVersion
+      require(v <= CatalogDef.FormatVersion,
+        s"catalog format version $v is newer than supported ${CatalogDef.FormatVersion}")
+      val parsed = cd.copy(formatVersion = v)
+      root.catalogDefMemo = Some(parsed)
+      parsed
+    }
 
   /** Commit a catalog-definition change (e.g. recording a named
     * snapshot export) as a new root version whose `catalog_def`
@@ -65,21 +71,18 @@ object Graft {
         if (cd2 == cd) return cd
         val defPath = FileLocations.newCatalogDefPath()
         storage.writeAtomic(defPath, Json.write(cd2))
-        val node = TreeOps.loadRoot(storage, latest.path.get)
-        // root shares node's Arrow-backed TreeNode; one close releases both
+        // the new version's tree is latest's, unchanged
+        val root = new TreeRoot(latest.node, latest.version,
+          latest.path, None, defPath, System.currentTimeMillis(), "[]")
         try {
-          val root = new graft.tree.TreeRoot(node.node, latest.version,
-            latest.path, None, defPath, System.currentTimeMillis(), "[]")
-          try {
-            TreeOps.writeRoot(storage, root, latest.version + 1)
-            return cd2
-          } catch {
-            case _: graft.storage.AtomicSealFailureException =>
-              attempt += 1
-              if (attempt > maxRetries) throw new graft.txn
-                .CommitFailedException("catalog-def update: too many retries")
-          }
-        } finally node.close()
+          TreeOps.writeRoot(storage, root, latest.version + 1)
+          return cd2
+        } catch {
+          case _: AtomicSealFailureException =>
+            attempt += 1
+            if (attempt > maxRetries)
+              throw new CommitFailedException("catalog-def update: too many retries")
+        }
       } finally latest.close()
     }
     throw new IllegalStateException("unreachable")
@@ -87,13 +90,16 @@ object Graft {
 
   // ---------- transactions ----------
 
-  /** Snapshot the latest root (Olympia.java:65-84). */
+  /** Snapshot the latest root (Olympia.java:65-84). The snapshot and
+    * running roots are two trees over the same decoded root file, and
+    * share its parsed catalog def.
+    */
   def beginTransaction(storage: StorageOps,
       isolationOverride: Option[String] = None): Transaction = {
     val latest = TreeOps.findLatestRoot(storage)
       .getOrElse(throw new IllegalStateException("catalog does not exist"))
     val cd = catalogDef(storage, latest)
-    val running = TreeOps.loadRoot(storage, latest.path.get)
+    val running = TreeOps.forkRoot(latest)
     val now = System.currentTimeMillis()
     new Transaction(
       UUID.randomUUID().toString,
@@ -169,11 +175,11 @@ object Graft {
               throw new CommitFailedException(s"txn ${txn.id}: $reason")
             case Right(_) =>
               // rebase: rebuild the running tree on the winner and
-              // replay this txn's effects in order; release the
-              // superseded running tree's buffers
+              // replay this txn's effects in order; drop the
+              // superseded running tree
               val superseded = root
               base = winner
-              root = TreeOps.loadRoot(storage, winner.path.get)
+              root = TreeOps.forkRoot(winner)
               replays.foreach(r => r(storage, root))
               txn.runningRoot = root
               if ((superseded ne txn.beginningRoot) && (superseded ne root))
@@ -251,7 +257,7 @@ object Graft {
       .getOrElse(throw new IllegalStateException("catalog does not exist"))
     try {
       val target = TreeOps.findRootForVersion(storage, latest, version)
-      val replay = TreeOps.loadRoot(storage, target.path.get)
+      val replay = TreeOps.forkRoot(target)
       if (target ne latest) target.close()
       replay.rollbackFromRootPath = latest.path
       replay.previousRootPath = latest.path

@@ -141,7 +141,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
         val out = f(txn)
         Graft.commitTransaction(storage, txn)
         out
-      } finally txn.close() // release Arrow buffers of the snapshot trees
+      } finally txn.close() // drop the snapshot trees
   }
 
   private[spark] def tableKey(td: TableDef): String = {
@@ -192,7 +192,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
         s"distributed transaction $id already exists")
       val latest = TreeOps.findLatestRoot(storage).get
       val cd = Graft.catalogDef(storage, latest)
-      val running = TreeOps.loadRoot(storage, latest.path.get)
+      val running = TreeOps.forkRoot(latest)
       val now = System.currentTimeMillis()
       val txn = new Transaction(id, cd.txnIsolationLevel, latest, running,
         now, now + cd.txnTtlMillis)

@@ -15,6 +15,20 @@ trait StorageOps {
   /** Catalog root prefix (absolute). */
   def root: String
 
+  /** The latest root this handle has decoded: its `vn/<bits>` path and
+    * file, or null. Filled only by [[graft.tree.TreeOps.findLatestRoot]]
+    * and cleared by every root write through this handle
+    * (`TreeOps.writeRoot`, so `Graft.createCatalog` too, and
+    * `TreeOps.writeRootAt`). A root file is created once and never
+    * rewritten (docs/format.md:230-246), so a slot whose path equals the
+    * latest version the probes found holds that version without a
+    * re-read. One slot per handle, never a global map: a catalog deleted
+    * and re-created under the same location by another process repeats
+    * the `vn/<bits>` names, so it needs fresh handles.
+    */
+  private[graft] final val latestRoot =
+    new java.util.concurrent.atomic.AtomicReference[(String, graft.tree.NodeFile)]()
+
   def exists(rel: String): Boolean
 
   def read(rel: String): Array[Byte]

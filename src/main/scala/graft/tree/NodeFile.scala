@@ -26,42 +26,45 @@ object TreeAllocator {
   lazy val root: RootAllocator = new RootAllocator()
 }
 
-/** A persisted node file loaded for reading: three VarCharVectors plus
-  * file-level metadata. Unlike the reference (which parses system rows
-  * stored before a NULL-key marker, TreeOperations.java:139-160), graft
-  * stores node/root metadata in the Arrow schema's custom-metadata map —
-  * same capability, simpler parsing; the data region is then the whole
-  * vector. Binary search runs directly over the Arrow buffers
-  * (TreeOperations.java:712-761, TreeUtil.java:43-66) — no row
-  * materialization on the lookup path.
+/** A persisted node file decoded for reading: the three VarChar
+  * columns copied into byte arrays plus the file-level metadata. Unlike
+  * the reference (which parses system rows stored before a NULL-key
+  * marker, TreeOperations.java:139-160), graft stores node/root
+  * metadata in the Arrow schema's custom-metadata map — same
+  * capability, simpler parsing; the data region is then the whole
+  * vector. The Arrow reader is closed before the constructor returns,
+  * so a `NodeFile` is immutable, holds no off-heap buffer and may be
+  * shared by any number of [[TreeNode]]s and threads. Binary search
+  * compares against the stored key arrays (TreeOperations.java:712-761,
+  * TreeUtil.java:43-66) — no row materialization on the lookup path.
   */
-final class NodeFile(bytes: Array[Byte]) extends AutoCloseable {
-  private val reader = new ArrowFileReader(
-    new ByteArrayReadableSeekableByteChannel(bytes), TreeAllocator.root)
-  private val root: VectorSchemaRoot = {
-    reader.loadNextBatch()
-    reader.getVectorSchemaRoot
+final class NodeFile(bytes: Array[Byte]) {
+  private val (keys, values, children, meta) = {
+    val reader = new ArrowFileReader(
+      new ByteArrayReadableSeekableByteChannel(bytes), TreeAllocator.root)
+    try {
+      reader.loadNextBatch()
+      val root = reader.getVectorSchemaRoot
+      def column(name: String): Array[Array[Byte]] = {
+        val v = root.getVector(name).asInstanceOf[VarCharVector]
+        Array.tabulate(root.getRowCount)(i => if (v.isNull(i)) null else v.get(i))
+      }
+      (column("key"), column("value"), column("pnode"),
+        root.getSchema.getCustomMetadata.asScala.toMap)
+    } finally reader.close()
   }
-  private val keyV = root.getVector("key").asInstanceOf[VarCharVector]
-  private val valueV = root.getVector("value").asInstanceOf[VarCharVector]
-  private val childV = root.getVector("pnode").asInstanceOf[VarCharVector]
 
-  val rowCount: Int = root.getRowCount
-  val metadata: Map[String, String] = root.getSchema.getCustomMetadata.asScala.toMap
+  val rowCount: Int = keys.length
+  val metadata: Map[String, String] = meta
 
-  def keyBytes(i: Int): Array[Byte] = keyV.get(i)
-  def valueBytes(i: Int): Array[Byte] = valueV.get(i)
-  def childBytes(i: Int): Array[Byte] = childV.get(i)
-  def valueIsNull(i: Int): Boolean = valueV.isNull(i)
-  def childIsNull(i: Int): Boolean = childV.isNull(i)
-  def key(i: Int): String = new String(keyV.get(i), StandardCharsets.UTF_8)
-  def value(i: Int): Option[String] =
-    if (valueV.isNull(i)) None else Some(new String(valueV.get(i), StandardCharsets.UTF_8))
-  def child(i: Int): Option[String] =
-    if (childV.isNull(i)) None else Some(new String(childV.get(i), StandardCharsets.UTF_8))
+  /** Row `i` over the stored arrays, shared: callers must not mutate them. */
+  def rawRow(i: Int): RawRow = RawRow(keys(i), values(i), children(i))
+  def key(i: Int): String = new String(keys(i), StandardCharsets.UTF_8)
+  def value(i: Int): Option[String] = Option(values(i)).map(new String(_, StandardCharsets.UTF_8))
+  def child(i: Int): Option[String] = Option(children(i)).map(new String(_, StandardCharsets.UTF_8))
   def row(i: Int): TreeRow = TreeRow(key(i), value(i), child(i))
 
-  /** Binary search over the key vector, unsigned-byte lexicographic
+  /** Binary search over the key column, unsigned-byte lexicographic
     * (matches Java String compare for the ASCII key alphabet). Returns
     * index if found, else `-(insertionPoint) - 1`.
     */
@@ -71,26 +74,13 @@ final class NodeFile(bytes: Array[Byte]) extends AutoCloseable {
     var hi = rowCount - 1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
-      val c = compareBytes(keyV.get(mid), tb)
+      val c = java.util.Arrays.compareUnsigned(keys(mid), tb)
       if (c == 0) return mid
       else if (c < 0) lo = mid + 1
       else hi = mid - 1
     }
     -(lo + 1)
   }
-
-  private def compareBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val c = (a(i) & 0xff) - (b(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    a.length - b.length
-  }
-
-  override def close(): Unit = reader.close()
 }
 
 object NodeFile {

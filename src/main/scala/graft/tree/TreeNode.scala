@@ -16,6 +16,9 @@ final case class VectorSlice(start: Int, end: Int) {
   * + pending changes, newest-wins (reference BasicTreeNode.java:27-239).
   * NOT thread-safe — all catalog mutation is driver-side, single-
   * threaded per transaction (Transaction.java:26-31, TreeNode.java:23-28).
+  * The persisted [[NodeFile]] is immutable and may be shared by several
+  * nodes (a transaction's snapshot and running roots share one); writes
+  * touch only this node's `pending`, `slices` and `loadedChildren`.
   *
   * A pending entry with value=None ∧ child=None is a tombstone
   * (removeKey is tombstone-only in the reference too —
@@ -149,15 +152,14 @@ final class TreeNode(var persisted: Option[NodeFile]) {
     if (best >= 0) Some(best) else None
   }
 
-  /** Release this node's Arrow buffers and those of loaded children.
-    * Idempotent; the tree must not be used afterwards.
+  /** Drop this node's references to its file and its loaded children,
+    * so a finished tree holds nothing reachable. Idempotent; the tree
+    * must not be used afterwards. A [[NodeFile]] is on-heap and may be
+    * shared with other trees, so there is nothing to release.
     */
   def close(): Unit = {
     loadedChildren.values.foreach(_.close())
     loadedChildren.clear()
-    persisted.foreach { f =>
-      try f.close() catch { case _: IllegalStateException => () /* already closed */ }
-    }
     persisted = None
     slices = Nil
   }
@@ -194,12 +196,8 @@ final class TreeNode(var persisted: Option[NodeFile]) {
                 row.child.map(_.getBytes(utf8)).orNull)
             }
           } else {
-            val i = persistedIt.next()
-            val value = if (f.valueIsNull(i)) null else f.valueBytes(i)
-            val child = if (f.childIsNull(i)) null else f.childBytes(i)
-            if (value != null || child != null) {
-              return RawRow(f.keyBytes(i), value, child)
-            }
+            val raw = f.rawRow(persistedIt.next())
+            if (raw.value != null || raw.child != null) return raw
           }
         }
         null

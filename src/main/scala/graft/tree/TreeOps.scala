@@ -1,6 +1,6 @@
 package graft.tree
 
-import graft.objects.FileLocations
+import graft.objects.{CatalogDef, FileLocations}
 import graft.storage.StorageOps
 
 /** Root node = tree node + catalog-version metadata (reference
@@ -20,8 +20,14 @@ final class TreeRoot(
     var createdAtMillis: Long,
     var actionsJson: String) {
   var path: Option[String] = None
+  /** The parsed catalog def, memoized by `Graft.catalogDef`:
+    * `catalogDefPath` never changes and def files are write-once.
+    */
+  var catalogDefMemo: Option[CatalogDef] = None
 
-  /** Release Arrow buffers; the root must not be used afterwards. */
+  /** Drop the tree's references ([[TreeNode.close]]); the root must not
+    * be used afterwards.
+    */
   def close(): Unit = node.close()
 }
 
@@ -49,18 +55,34 @@ object TreeOps {
     root
   }
 
-  def loadNode(storage: StorageOps, path: String): TreeNode = {
-    val file = new NodeFile(storage.read(path))
+  def loadNode(storage: StorageOps, path: String): TreeNode =
+    nodeOf(new NodeFile(storage.read(path)))
+
+  private def nodeOf(file: NodeFile): TreeNode = {
     val node = new TreeNode(Some(file))
     node.leftmostChildPath = file.metadata.get(MLeftmost)
     node
   }
 
-  def loadRoot(storage: StorageOps, path: String): TreeRoot = {
-    val node = loadNode(storage, path)
-    val md = node.persisted.get.metadata
+  def loadRoot(storage: StorageOps, path: String): TreeRoot =
+    openRoot(new NodeFile(storage.read(path)), path)
+
+  /** A second, independent root over `root`'s persisted file: the
+    * decoded file (and the memoized catalog def) are shared, staged
+    * changes are not. `root` must be a loaded root with no staged
+    * changes.
+    */
+  def forkRoot(root: TreeRoot): TreeRoot = {
+    require(!root.node.dirty, "cannot fork a root with staged changes")
+    val fork = openRoot(root.node.persisted.get, root.path.get)
+    fork.catalogDefMemo = root.catalogDefMemo
+    fork
+  }
+
+  private def openRoot(file: NodeFile, path: String): TreeRoot = {
+    val md = file.metadata
     val root = new TreeRoot(
-      node,
+      nodeOf(file),
       md(MVersion).toLong,
       md.get(MPreviousRoot),
       md.get(MRollbackFrom),
@@ -209,6 +231,7 @@ object TreeOps {
       root.previousRootPath.map(MPreviousRoot -> _).toMap ++
       root.rollbackFromRootPath.map(MRollbackFrom -> _).toMap
     val path = writeNode(storage, root.node, Some(newVersion), rootMeta)
+    storage.latestRoot.set(null)
     root.version = newVersion
     root.createdAtMillis = now
     root.path = Some(path)
@@ -235,6 +258,7 @@ object TreeOps {
     writeDirtyChildren(storage, root.node)
     val meta = rootMeta ++ root.node.leftmostChildPath.map(MLeftmost -> _).toMap
     storage.overwrite(path, NodeFile.writeRaw(root.node.mergedRawRows, meta))
+    storage.latestRoot.set(null)
     root.node.dirty = false
     root.path = Some(path)
   }
@@ -322,7 +346,12 @@ object TreeOps {
   /** Latest committed root: start from the `vn/latest` hint, then probe
     * forward until a version is missing (reference findLatestRoot,
     * TreeOperations.java:342-371 — including the fix for its probe
-    * off-by-one, SURVEY §4.3.5).
+    * off-by-one, SURVEY §4.3.5). On an unchanged catalog that is the
+    * hint read plus two probes, `exists(v)` and `exists(v + 1)`. The
+    * root file itself comes from the handle's
+    * [[graft.storage.StorageOps.latestRoot]] slot when it holds
+    * `vn/<v>`; otherwise it is read and decoded once and replaces the
+    * slot. Each call returns a fresh [[TreeRoot]] over the shared file.
     */
   def findLatestRoot(storage: StorageOps): Option[TreeRoot] = {
     // the hint is BEST-EFFORT: read it without an exists probe first; a
@@ -347,7 +376,15 @@ object TreeOps {
         versions.max
       }
     while (storage.exists(FileLocations.rootNodePath(v + 1))) v += 1
-    Some(loadRoot(storage, FileLocations.rootNodePath(v)))
+    val path = FileLocations.rootNodePath(v)
+    val file = storage.latestRoot.get match {
+      case (`path`, f) => f
+      case _ =>
+        val f = new NodeFile(storage.read(path))
+        storage.latestRoot.set((path, f))
+        f
+    }
+    Some(openRoot(file, path))
   }
 
   /** Catalog time travel by version: walk the previous_root chain
@@ -375,7 +412,7 @@ object TreeOps {
         throw new IllegalArgumentException(
           s"version $version unreachable (expired or never existed)"))
       val next = loadRoot(storage, prev)
-      if (cur ne latest) cur.close() // intermediate hop: release buffers
+      if (cur ne latest) cur.close() // intermediate hop
       cur = next
     }
     cur
@@ -402,7 +439,7 @@ object TreeOps {
           s"no catalog version exists at or before timestamp $ts " +
             "(older history may have been expired)")
       }
-      if (cur ne latest) cur.close() // intermediate hop: release buffers
+      if (cur ne latest) cur.close() // intermediate hop
       cur = next
     }
     cur
@@ -436,7 +473,7 @@ object TreeOps {
     out.result()
   }
 
-  /** Latest catalog version number, releasing the root's buffers. */
+  /** Latest catalog version number. */
   def latestVersion(storage: StorageOps): Option[Long] =
     findLatestRoot(storage).map(r => try r.version finally r.close())
 
@@ -457,21 +494,23 @@ object TreeOps {
   /** In-order traversal of all live rows (reference getNodeKeyTable,
     * TreeOperations.java:425-450) — powers SHOW NAMESPACES/TABLES/VIEWS.
     * Lazy per node; for billion-object catalogs expose node files as a
-    * DataFrame instead (SURVEY §7.5 risk register).
+    * DataFrame instead (SURVEY §7.5 risk register). A child split off
+    * by a staged write has no file yet (its path is empty until the
+    * commit writes it); `loadChild` finds it among the loaded children.
     */
   def traverse(storage: StorageOps, root: TreeRoot): Iterator[TreeRow] =
     walkNode(storage, root.node)
 
   private def walkNode(storage: StorageOps, node: TreeNode): Iterator[TreeRow] = {
     val leftmost = node.leftmostChildPath match {
-      case Some(p) if p.nonEmpty =>
+      case Some(p) =>
         walkNode(storage, loadChild(storage, node, None, p))
       case _ => Iterator.empty
     }
     leftmost ++ node.mergedRows.iterator.flatMap { r =>
       val self = if (r.value.isDefined) Iterator.single(r) else Iterator.empty
       val sub = r.child match {
-        case Some(p) if p.nonEmpty =>
+        case Some(p) =>
           walkNode(storage, loadChild(storage, node, Some(r.key), p))
         case _ => Iterator.empty
       }
@@ -499,19 +538,19 @@ object TreeOps {
       // subtree right of it is fully beyond the cut and walks whole
       val straddle: Iterator[TreeRow] =
         if (j == 0) node.leftmostChildPath match {
-          case Some(p) if p.nonEmpty =>
+          case Some(p) =>
             walkFrom(loadChild(storage, node, None, p))
           case _ => Iterator.empty
         }
         else rows(j - 1).child match {
-          case Some(p) if p.nonEmpty =>
+          case Some(p) =>
             walkFrom(loadChild(storage, node, Some(rows(j - 1).key), p))
           case _ => Iterator.empty
         }
       straddle ++ rows.iterator.drop(j).flatMap { r =>
         val self = if (r.value.isDefined) Iterator.single(r) else Iterator.empty
         val sub = r.child match {
-          case Some(p) if p.nonEmpty =>
+          case Some(p) =>
             walkNode(storage, loadChild(storage, node, Some(r.key), p))
           case _ => Iterator.empty
         }

@@ -33,9 +33,10 @@ final class Transaction(
 
   var committed: Boolean = false
 
-  /** Release the Arrow buffers of both tree snapshots. Call once the
-    * transaction is finished (committed, rolled back, or suspended);
-    * recorded actions/results stay valid — only tree reads die.
+  /** Drop both tree snapshots ([[graft.tree.TreeNode.close]]). Call
+    * once the transaction is finished (committed, rolled back, or
+    * suspended); recorded actions/results stay valid — only tree reads
+    * die.
     */
   def close(): Unit = {
     beginningRoot.close()

@@ -87,10 +87,8 @@ object TreeProperties extends Properties("Tree") {
       val rows = keys.distinct.sorted.map(k => TreeRow(k, Some(s"v-$k"), None))
       val bytes = NodeFile.write(rows, Map.empty)
       val nf = new NodeFile(bytes)
-      try {
-        val hits = rows.forall(r => nf.binarySearch(r.key) >= 0)
-        val miss = nf.binarySearch("zzzzzz~") < 0
-        hits && miss
-      } finally nf.close()
+      val hits = rows.forall(r => nf.binarySearch(r.key) >= 0)
+      val miss = nf.binarySearch("zzzzzz~") < 0
+      hits && miss
     }
 }
