@@ -320,84 +320,79 @@ object Maintenance {
     val storage = cat.storage
     val txn = Graft.beginTransaction(storage)
     val ns = ident.namespace()(0)
-    val td = Graft.describeTable(storage, txn, ns, ident.name())
-    val meta0 = TableMetadata.read(storage, td.metadataLocation)
-    // commit timestamps are monotone with ids, so "at/after the
-    // cutoff" is a suffix — age-retention folds into a larger keepLast.
-    // Segment refs carry ts bounds: only a cutoff-straddling segment
-    // is opened to count.
-    val meta = meta0
-    val keepLastEff =
-      if (olderThanMillis < 0) keepLast
-      else {
-        val inlineN = meta.snapshots.count(_.timestampMillis >= olderThanMillis)
-        val logN = meta.snapshotLog.map { r =>
-          if (r.firstTs >= olderThanMillis) r.count
-          else if (r.lastTs < olderThanMillis) 0L
-          else graft.format.SnapshotLog.read(storage, r.key)
-            .count(_.timestampMillis >= olderThanMillis).toLong
-        }.sum
-        math.max(keepLast.toLong, inlineN + logN).min(Int.MaxValue).toInt
-      }
-    // whole spilled log segments die without being opened when every
-    // snapshot in them expires (ref bounds say so); only a segment the
-    // cutoff splits gets read
-    val inlineKeep = meta.snapshots.sortBy(-_.id).take(keepLastEff)
-    val fromLog = math.max(keepLastEff - inlineKeep.size, 0)
-    val (deadWhole, tailRefs) = {
-      var need = fromLog
-      val dead = Seq.newBuilder[graft.format.SnapshotLogRef]
-      val kept = Seq.newBuilder[graft.format.SnapshotLogRef]
-      meta.snapshotLog.reverse.foreach { r =>
-        if (need > 0) { kept += r; need -= (need min r.count.toInt) }
-        else dead += r
-      }
-      (dead.result(), kept.result().reverse)
-    }
-    val logKeep = tailRefs
-      .flatMap(r => graft.format.SnapshotLog.read(storage, r.key))
-      .sortBy(-_.id).take(fromLog)
-    val windowKeep = (logKeep ++ inlineKeep).sortBy(_.id)
-    // snapshots pinned by a named ref (tag) survive expiration however
-    // old they are — a tag that silently stopped resolving would be a
-    // broken promise, not a retention policy. Pinned snapshots are
-    // lifted out of their (possibly dying) log segments into the kept
-    // list, and their manifest segments stay live through keptRefs.
-    val keptIds = windowKeep.map(_.id).toSet
-    val pinned = (meta.refs.values ++ meta.branches.values).toSeq.distinct.sorted
-      .filterNot(keptIds)
-      .flatMap(id => meta.findSnapshot(storage, id))
-    val keep = (pinned ++ windowKeep).sortBy(_.id)
-    val expired = (meta.totalSnapshots - keep.size).toInt
+    var expired = 0
+    var deadManifests = Seq.empty[String]
+    var deadStats = Option.empty[graft.format.StatsFileRef]
+    GraftCatalog.stageTableEdit(storage, txn, ns, ident.name(),
+      graft.txn.ActionType.AlterTable)(
+      GraftCatalog.editTable(_, _, ns, ident.name()) { (_, td, meta) =>
+        // commit timestamps are monotone with ids, so "at/after the
+        // cutoff" is a suffix — age-retention folds into a larger keepLast.
+        // Segment refs carry ts bounds: only a cutoff-straddling segment
+        // is opened to count.
+        val keepLastEff =
+          if (olderThanMillis < 0) keepLast
+          else {
+            val inlineN = meta.snapshots.count(_.timestampMillis >= olderThanMillis)
+            val logN = meta.snapshotLog.map { r =>
+              if (r.firstTs >= olderThanMillis) r.count
+              else if (r.lastTs < olderThanMillis) 0L
+              else graft.format.SnapshotLog.read(storage, r.key)
+                .count(_.timestampMillis >= olderThanMillis).toLong
+            }.sum
+            math.max(keepLast.toLong, inlineN + logN).min(Int.MaxValue).toInt
+          }
+        // whole spilled log segments die without being opened when every
+        // snapshot in them expires (ref bounds say so); only a segment the
+        // cutoff splits gets read
+        val inlineKeep = meta.snapshots.sortBy(-_.id).take(keepLastEff)
+        val fromLog = math.max(keepLastEff - inlineKeep.size, 0)
+        val (deadWhole, tailRefs) = {
+          var need = fromLog
+          val dead = Seq.newBuilder[graft.format.SnapshotLogRef]
+          val kept = Seq.newBuilder[graft.format.SnapshotLogRef]
+          meta.snapshotLog.reverse.foreach { r =>
+            if (need > 0) { kept += r; need -= (need min r.count.toInt) }
+            else dead += r
+          }
+          (dead.result(), kept.result().reverse)
+        }
+        val logKeep = tailRefs
+          .flatMap(r => graft.format.SnapshotLog.read(storage, r.key))
+          .sortBy(-_.id).take(fromLog)
+        val windowKeep = (logKeep ++ inlineKeep).sortBy(_.id)
+        // snapshots pinned by a named ref (tag) survive expiration however
+        // old they are — a tag that silently stopped resolving would be a
+        // broken promise, not a retention policy. Pinned snapshots are
+        // lifted out of their (possibly dying) log segments into the kept
+        // list, and their manifest segments stay live through keptRefs.
+        val keptIds = windowKeep.map(_.id).toSet
+        val pinned = (meta.refs.values ++ meta.branches.values).toSeq.distinct.sorted
+          .filterNot(keptIds)
+          .flatMap(id => meta.findSnapshot(storage, id))
+        val keep = (pinned ++ windowKeep).sortBy(_.id)
+        expired = (meta.totalSnapshots - keep.size).toInt
+        if (expired == 0) meta // nothing to write, nothing to commit
+        else {
+          // manifest segments referenced ONLY by expired snapshots die with
+          // them (segments are shared across snapshots, so live refs win) —
+          // deleted only AFTER the expiration commit succeeds
+          val keptRefs = keep.flatMap(_.manifests).toSet
+          deadManifests = (meta.allSnapshots(storage).flatMap(_.manifests).distinct
+            .filterNot(keptRefs)) ++
+            (deadWhole ++ tailRefs).map(_.key)
+          // a statistics file whose covered snapshot expires goes with it
+          // (the ref first — the puffin object is deleted post-commit below)
+          val keptStats = meta.stats.filter(st => keep.exists(_.id == st.snapshotId))
+          deadStats = meta.stats.filterNot(st => keptStats.contains(st))
+          graft.format.SnapshotLog.spill(storage,
+            GraftCatalog.tableManifestDir(ns, ident.name()),
+            meta.copy(snapshots = keep, snapshotLog = Seq.empty, stats = keptStats),
+            td.properties.get(graft.format.SnapshotLog.InlineMaxProp)
+              .map(_.toInt).getOrElse(graft.format.SnapshotLog.InlineMaxDefault))
+        }
+      })
     if (expired == 0) return 0
-    // manifest segments referenced ONLY by expired snapshots die with
-    // them (segments are shared across snapshots, so live refs win) —
-    // deleted only AFTER the expiration commit succeeds
-    val keptRefs = keep.flatMap(_.manifests).toSet
-    val deadManifests = (meta.allSnapshots(storage).flatMap(_.manifests).distinct
-      .filterNot(keptRefs)) ++
-      (deadWhole ++ tailRefs).map(_.key)
-    // a statistics file whose covered snapshot expires goes with it
-    // (the ref first — the puffin object is deleted post-commit below)
-    val keptStats = meta.stats.filter(st => keep.exists(_.id == st.snapshotId))
-    val deadStats = meta.stats.filterNot(st => keptStats.contains(st))
-    val meta2 = graft.format.SnapshotLog.spill(storage,
-      GraftCatalog.tableManifestDir(ns, ident.name()),
-      meta.copy(snapshots = keep, snapshotLog = Seq.empty, stats = keptStats),
-      td.properties.get(graft.format.SnapshotLog.InlineMaxProp)
-        .map(_.toInt).getOrElse(graft.format.SnapshotLog.InlineMaxDefault))
-    val metaPath = FileLocations.tableMetadataPath(ns, ident.name())
-    TableMetadata.write(storage, metaPath, meta2)
-    val defPath = FileLocations.newTableDefPath(ns, ident.name())
-    storage.writeAtomic(defPath, Json.write(td.copy(
-      metadataLocation = metaPath,
-      previousMetadataLocation = Some(td.metadataLocation))))
-    val cd = Graft.catalogDef(storage, txn.runningRoot)
-    val key = ObjectKeys.tableKey(ns, ident.name(), cd)
-    TreeOps.setValue(storage, txn.runningRoot, key, Some(defPath), cd.order)
-    txn.replays += ((s, r) => TreeOps.setValue(s, r, key, Some(defPath),
-      Graft.catalogDef(s, r).order))
-    txn.record(graft.txn.Action(graft.txn.ActionType.AlterTable, key))
     Graft.commitTransaction(storage, txn)
     if (deadManifests.nonEmpty) storage.deleteBatch(deadManifests)
     deadStats.foreach(st => storage.deleteBatch(Seq(st.path)))
@@ -1544,14 +1539,8 @@ object Maintenance {
       ns: String, table: String, op: String,
       edit: graft.format.FilesEdit,
       branch: Option[String] = None): Unit =
-    commitMetaEdit(cat, ns, table, op, Some(txn)) { (s, td, meta) =>
-      val inlineMax = td.properties.get(graft.format.Manifests.InlineMaxProp)
-        .map(_.toInt).getOrElse(graft.format.Manifests.InlineMaxDefault)
-      val snapsInlineMax = td.properties.get(graft.format.SnapshotLog.InlineMaxProp)
-        .map(_.toInt).getOrElse(graft.format.SnapshotLog.InlineMaxDefault)
-      meta.withSnapshotEdit(s, GraftCatalog.tableManifestDir(ns, table), op,
-        edit, inlineMax, snapsInlineMax, branch)
-    }
+    commitEdit(cat, txn, ns, table, op)(
+      GraftCatalog.applyFilesCommit(_, _, ns, table, op, edit, branch))
 
   /** Commit one table-metadata transformation through the optimistic
     * catalog transaction (rebase replays re-apply `f` on the winner
@@ -1560,29 +1549,15 @@ object Maintenance {
   private def commitMetaEdit(cat: GraftCatalog, ns: String, table: String,
       op: String, existingTxn: Option[graft.txn.Transaction] = None)(
       f: (graft.storage.StorageOps, TableDef, TableMetadata) => TableMetadata)
-      : Unit = {
-    val storage = cat.storage
-    val txn = existingTxn.getOrElse(Graft.beginTransaction(storage))
-    def apply(s: graft.storage.StorageOps, root: graft.tree.TreeRoot): Unit = {
-      val cd = Graft.catalogDef(s, root)
-      val key = ObjectKeys.tableKey(ns, table, cd)
-      val defPath = TreeOps.searchValue(s, root, key).get
-      val td = Json.read(s.read(defPath), classOf[TableDef])
-      val meta = TableMetadata.read(s, td.metadataLocation)
-      val meta2 = f(s, td, meta)
-      val metaPath = FileLocations.tableMetadataPath(ns, table)
-      TableMetadata.write(s, metaPath, meta2)
-      val defPath2 = FileLocations.newTableDefPath(ns, table)
-      s.writeAtomic(defPath2, Json.write(td.copy(
-        metadataLocation = metaPath,
-        previousMetadataLocation = Some(td.metadataLocation))))
-      TreeOps.setValue(s, root, key, Some(defPath2), cd.order)
-    }
-    apply(storage, txn.runningRoot)
-    txn.replays += ((s, r) => apply(s, r))
-    val cd = Graft.catalogDef(storage, txn.runningRoot)
-    txn.record(graft.txn.Action(graft.txn.ActionType.TableUpdate,
-      ObjectKeys.tableKey(ns, table, cd), Map("op" -> op)))
-    Graft.commitTransaction(storage, txn)
+      : Unit =
+    commitEdit(cat, existingTxn.getOrElse(Graft.beginTransaction(cat.storage)),
+      ns, table, op)(GraftCatalog.editTable(_, _, ns, table)(f))
+
+  private def commitEdit(cat: GraftCatalog, txn: graft.txn.Transaction,
+      ns: String, table: String, op: String)(
+      apply: (graft.storage.StorageOps, graft.tree.TreeRoot) => Unit): Unit = {
+    GraftCatalog.stageTableEdit(cat.storage, txn, ns, table,
+      graft.txn.ActionType.TableUpdate, Map("op" -> op))(apply)
+    Graft.commitTransaction(cat.storage, txn)
   }
 }

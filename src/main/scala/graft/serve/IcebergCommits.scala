@@ -11,7 +11,7 @@ import graft.objects.{Json, ObjectKeys, TableDef}
 import graft.spark.{ColumnMapping, GraftCatalog}
 import graft.storage.StorageOps
 import graft.tree.{TreeOps, TreeRoot}
-import graft.txn.{Action, ActionType, Transaction}
+import graft.txn.{ActionType, Transaction}
 import org.apache.spark.sql.types._
 
 /** External COMMITS through the REST facade: the PUBLIC Apache
@@ -349,32 +349,20 @@ object IcebergCommits {
           if (now != want) throw new RequirementFailedException(
             s"ref main moved during commit: at $now, commit based on $want")
         }
-      if (snapshot != null) {
-        val edit: FilesEdit =
-          if (op == "append") AppendFiles(cs.adds)
-          else if (posDeletes.nonEmpty) AddRowDeltas(cs.adds, posDeletes)
-          else if (eqDeletes.nonEmpty) AddUpsert(cs.adds, eqDeletes)
-          else ReplaceFiles(cs.removes, cs.adds)
-        applyChecked(storage, txn.runningRoot, ns, t, op, edit)
-        txn.replays += { (s, r) =>
-          replayGuard(s, r)
-          applyChecked(s, r, ns, t, op, edit)
-        }
+      val edit: Option[FilesEdit] = Option(snapshot).map { _ =>
+        if (op == "append") AppendFiles(cs.adds)
+        else if (posDeletes.nonEmpty) AddRowDeltas(cs.adds, posDeletes)
+        else if (eqDeletes.nonEmpty) AddUpsert(cs.adds, eqDeletes)
+        else ReplaceFiles(cs.removes, cs.adds)
       }
-      applyMetaEdits(storage, txn.runningRoot)
-      val hasMetaEdits =
-        clientSchema != null || propSets.nonEmpty || propRemovals.nonEmpty
-      if (hasMetaEdits && snapshot == null)
-        txn.replays += { (s, r) => replayGuard(s, r); applyMetaEdits(s, r) }
-      else if (hasMetaEdits)
-        txn.replays += applyMetaEdits
-      val cd = Graft.catalogDef(storage, txn.runningRoot)
-      txn.record(Action(
+      GraftCatalog.stageTableEdit(storage, txn, ns, t,
         if (snapshot == null || op != "append") ActionType.TableUpdate
         else ActionType.TableInsert,
-        ObjectKeys.tableKey(ns, t, cd),
-        Map("files" -> cs.adds.map(_.path).mkString(","))))
-      ()
+        Map("files" -> cs.adds.map(_.path).mkString(",")), replayGuard) {
+        (s, r) =>
+          edit.foreach(applyChecked(s, r, ns, t, op, _))
+          applyMetaEdits(s, r)
+      }
     }
   }
 

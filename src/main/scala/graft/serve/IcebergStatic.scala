@@ -6,7 +6,7 @@ import graft.format.{AppendFiles, DataFileEntry, TableMetadata}
 import graft.objects.{FileLocations, Json, TableDef}
 import graft.spark.GraftCatalog
 import graft.storage.StorageOps
-import graft.txn.Transaction
+import graft.txn.{ActionType, Transaction}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Static Iceberg-format interchange WITHOUT the REST server: export a
@@ -168,11 +168,9 @@ object IcebergStatic {
     Graft.createTable(storage, txn,
       TableDef(name, ns, metadataLocation = metaPath, properties = props))
     if (files.nonEmpty)
-      GraftCatalog.applyFilesCommit(storage, txn.runningRoot, ns, name,
-        "append", AppendFiles(files))
-    // no explicit replay closures: a lost root race rebases by
-    // key-level diff (Graft.diffReplays), which re-puts the created
-    // def — the metadata documents written above are immutable
+      GraftCatalog.stageTableEdit(storage, txn, ns, name, ActionType.TableInsert,
+        GraftCatalog.filesArgs(files))(
+        GraftCatalog.applyFilesCommit(_, _, ns, name, "append", AppendFiles(files)))
   }
 
   private def currentSchema(node: JsonNode): StructType = {

@@ -498,7 +498,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
     }
     val latest = TreeOps.findLatestRoot(storage).get
     try loadAtRoot(ident, TreeOps.findRootForVersion(storage, latest, version.toLong))
-    finally latest.close() // idempotent if findRootForVersion returned it
+    finally latest.close()
   }
 
   /** `TIMESTAMP AS OF t` — Spark passes microseconds since epoch. */
@@ -506,16 +506,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
     val latest = TreeOps.findLatestRoot(storage).get
     try loadAtRoot(ident,
       TreeOps.findRootBeforeTimestamp(storage, latest, timestamp / 1000L))
-    finally latest.close() // idempotent if the walk returned it
+    finally latest.close()
   }
 
-  /** Takes ownership of `root`: its buffers are released before return
-    * (a frozen copy is re-loaded from its path for the table's txn).
+  /** The table as of the catalog version `root` holds, read through a
+    * frozen fork of `root`: the decoded root file is shared, not read
+    * again, and `root` stays usable by the caller.
     */
   private def loadAtRoot(ident: Identifier, root: TreeRoot): Table = {
-    val rootPath = root.path.get
-    root.close()
-    val frozen = TreeOps.loadRoot(storage, rootPath)
+    val frozen = TreeOps.forkRoot(root)
     val txn = new Transaction(UUID.randomUUID().toString,
       IsolationLevel.Snapshot, frozen, frozen,
       System.currentTimeMillis(), Long.MaxValue)
@@ -701,6 +700,28 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
 
   // ---------------- write commit (called from GraftAppendBatchWrite) ----------------
 
+  /** Run one table write in the transaction `ident` addresses, with
+    * the namespace, table and branch it names. `sys.dtxns.<id>.<ns>.<t>`
+    * applies to the suspended distributed transaction and suspends it
+    * again: nothing publishes until its commit property is set
+    * (write-audit-publish, docs/index.md:54-64). Any other identifier
+    * runs in the session transaction or an auto-commit one, and
+    * `t$branch_x` targets branch `x` of `t` (its commits advance the
+    * branch ref; main stays untouched).
+    */
+  private def withTable[T](ident: Identifier)(
+      f: (Transaction, String, String, Option[String]) => T): T = {
+    val (t, branch) = GraftCatalog.splitBranch(ident.name())
+    if (!isDtxnPath(ident.namespace()))
+      return inTxn(f(_, ns1(ident.namespace()), t, branch))
+    val txn = Graft.loadDistTransaction(storage, ident.namespace()(2))
+    try {
+      val out = f(txn, ident.namespace()(3), t, branch)
+      Graft.saveDistTransaction(storage, txn)
+      out
+    } finally txn.close()
+  }
+
   /** Commit already-staged data files as a snapshot that appends (or
     * replaces) the table's file list. Registered as a replay so a lost
     * commit race re-merges with the winner's file list instead of
@@ -711,41 +732,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
     */
   private[spark] def commitFiles(ident: Identifier,
       newFiles: Seq[graft.format.DataFileEntry], overwrite: Boolean): Unit = {
-    // write inside a suspended distributed txn: apply to its running
-    // tree and re-suspend — nothing publishes until the commit property
-    // is set (write-audit-publish, docs/index.md:54-64)
-    if (isDtxnPath(ident.namespace())) {
-      val id = ident.namespace()(2)
-      val ns = ident.namespace()(3)
-      val t = ident.name()
-      val txn = Graft.loadDistTransaction(storage, id)
-      try {
-        applyTableCommit(storage, txn.runningRoot, ns, t, "append", newFiles,
-          overwrite)
-        val cd = Graft.catalogDef(storage, txn.runningRoot)
-        txn.record(Action(ActionType.TableInsert,
-          ObjectKeys.tableKey(ns, t, cd),
-          Map("files" -> newFiles.map(_.path).mkString(",")) ++
-            graft.format.StatsRanges.args(newFiles)))
-        Graft.saveDistTransaction(storage, txn)
-      } finally txn.close()
-      return
-    }
-    val ns = ns1(ident.namespace())
-    // `t$branch_x` writes advance the branch ref; main stays untouched
-    val (t, branch) = GraftCatalog.splitBranch(ident.name())
-    val op = if (overwrite) "overwrite" else "append"
-    inTxn { txn =>
-      applyTableCommit(storage, txn.runningRoot, ns, t, op, newFiles,
-        overwrite, branch)
-      txn.replays += ((s, r) => applyTableCommit(s, r, ns, t, op, newFiles,
-        overwrite, branch))
-      val cd = Graft.catalogDef(storage, txn.runningRoot)
-      txn.record(Action(
+    val (op, edit) =
+      if (overwrite) ("overwrite", graft.format.OverwriteFiles(newFiles))
+      else ("append", graft.format.AppendFiles(newFiles))
+    withTable(ident) { (txn, ns, t, branch) =>
+      GraftCatalog.stageTableEdit(storage, txn, ns, t,
         if (overwrite) ActionType.TableUpdate else ActionType.TableInsert,
-        ObjectKeys.tableKey(ns, t, cd),
-        Map("files" -> newFiles.map(_.path).mkString(",")) ++
-          graft.format.StatsRanges.args(newFiles)))
+        GraftCatalog.filesArgs(newFiles))(
+        GraftCatalog.applyFilesCommit(_, _, ns, t, op, edit, branch))
     }
   }
 
@@ -782,9 +776,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
   private[spark] def morDelete(ident: Identifier,
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Unit = {
     require(exprs.nonEmpty, "merge-on-read delete needs a predicate")
-    val ns = ns1(ident.namespace())
-    val (t, branch) = GraftCatalog.splitBranch(ident.name())
-    inTxn { txn =>
+    withTable(ident) { (txn, ns, t, branch) =>
       val td = Graft.describeTable(storage, txn, ns, t)
       val meta = TableMetadata.read(storage, td.metadataLocation)
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
@@ -799,12 +791,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
       // copy-on-write path, which only swaps the files it scanned)
       val atSeq = meta.headSnapshot(storage, branch).map(_.seq).getOrElse(0L)
       val edit = graft.format.AddDeletePredicate(sql, atSeq)
-      applyFilesCommit(storage, txn.runningRoot, ns, t, "delete", edit, branch)
-      txn.replays += ((s, r) =>
-        applyFilesCommit(s, r, ns, t, "delete", edit, branch))
-      val cd = Graft.catalogDef(storage, txn.runningRoot)
-      txn.record(Action(ActionType.TableDelete,
-        ObjectKeys.tableKey(ns, t, cd), Map("predicate" -> sql)))
+      GraftCatalog.stageTableEdit(storage, txn, ns, t, ActionType.TableDelete,
+        Map("predicate" -> sql))(
+        GraftCatalog.applyFilesCommit(_, _, ns, t, "delete", edit, branch))
     }
   }
 
@@ -823,15 +812,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
       // drop from metadata without being read
       wholeFileExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
         Seq.empty): Unit = {
-    val ns = ns1(ident.namespace())
-    val (t, branch) = GraftCatalog.splitBranch(ident.name())
-    val (meta, spec, schema, tblProps) = inTxn { txn =>
+    val (ns, t, branch, meta, td) = withTable(ident) { (txn, ns, t, branch) =>
       val td = Graft.describeTable(storage, txn, ns, t)
-      val m = TableMetadata.read(storage, td.metadataLocation)
-      (m, GraftCatalog.specOf(td.properties),
-        DataType.fromJson(m.schemaJson).asInstanceOf[StructType],
-        td.properties)
+      (ns, t, branch, TableMetadata.read(storage, td.metadataLocation), td)
     }
+    val spec = GraftCatalog.specOf(td.properties)
+    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     // files + their stats speak PHYSICAL names; the rewrite fn speaks
     // logical — read physical, re-label, rewrite, write physical
     val renames = ColumnMapping.renames(schema)
@@ -890,8 +876,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
             df.withColumnRenamed(physical, logical)
         }
         GraftCatalog.commitDataFiles(rewrite(logicalDf), spec, storage, ns, t,
-          Some(schema), GraftWriteSupport.parquetOptions(tblProps, schema),
-          graft.format.FileBloom.specOf(tblProps, renames))
+          Some(schema), GraftWriteSupport.parquetOptions(td.properties, schema),
+          graft.format.FileBloom.specOf(td.properties, renames))
       }
     // a complete-predicate DELETE records its predicate (physical
     // names, like merge-on-read's DeletePredicate) on the snapshot:
@@ -902,14 +888,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
         ColumnMapping.toPhysicalExpr(wholeFileExprs.reduce(
           org.apache.spark.sql.catalyst.expressions.And(_, _)), renames).sql
       else ""
-    inTxn { txn =>
-      applyReplaceCommit(storage, txn.runningRoot, ns, t, op, replaced,
-        newFiles, branch, deleteSql)
-      txn.replays += ((s, r) =>
-        applyReplaceCommit(s, r, ns, t, op, replaced, newFiles, branch,
-          deleteSql))
-      val cd = Graft.catalogDef(storage, txn.runningRoot)
-      txn.record(Action(actionType, ObjectKeys.tableKey(ns, t, cd), Map.empty))
+    val edit = graft.format.ReplaceFiles(replaced, newFiles, deleteSql)
+    withTable(ident) { (txn, _, _, _) =>
+      GraftCatalog.stageTableEdit(storage, txn, ns, t, actionType)(
+        GraftCatalog.applyFilesCommit(_, _, ns, t, op, edit, branch))
     }
   }
 
@@ -921,38 +903,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
   private[spark] def commitReplace(ident: Identifier, replacedPaths: Seq[String],
       newFiles: Seq[graft.format.DataFileEntry], op: String,
       actionType: String): Unit = {
-    val replaced = replacedPaths.toSet
-    // inside a suspended distributed txn: apply to its running tree
-    // and re-suspend (write-audit-publish, docs/index.md:54-64)
-    if (isDtxnPath(ident.namespace())) {
-      val id = ident.namespace()(2)
-      val ns = ident.namespace()(3)
-      val t = ident.name()
-      val txn = Graft.loadDistTransaction(storage, id)
-      try {
-        applyReplaceCommit(storage, txn.runningRoot, ns, t, op, replaced, newFiles)
-        val cd = Graft.catalogDef(storage, txn.runningRoot)
-        txn.record(Action(actionType, ObjectKeys.tableKey(ns, t, cd),
-          Map("files" -> newFiles.map(_.path).mkString(",")) ++
-            graft.format.StatsRanges.args(newFiles)))
-        Graft.saveDistTransaction(storage, txn)
-      } finally txn.close()
-      return
-    }
-    val ns = ns1(ident.namespace())
-    // `t$branch_x` row-level rewrites replace files ON THE BRANCH: the
-    // scan already read the branch-pinned state, the commit advances
-    // the branch ref and leaves main untouched
-    val (t, branch) = GraftCatalog.splitBranch(ident.name())
-    inTxn { txn =>
-      applyReplaceCommit(storage, txn.runningRoot, ns, t, op, replaced,
-        newFiles, branch)
-      txn.replays += ((s, r) =>
-        applyReplaceCommit(s, r, ns, t, op, replaced, newFiles, branch))
-      val cd = Graft.catalogDef(storage, txn.runningRoot)
-      txn.record(Action(actionType, ObjectKeys.tableKey(ns, t, cd),
-        Map("files" -> newFiles.map(_.path).mkString(",")) ++
-          graft.format.StatsRanges.args(newFiles)))
+    // on a rebase replay the replaced paths leave WHATEVER the winner
+    // committed: an append that raced this rewrite keeps its files
+    val edit = graft.format.ReplaceFiles(replacedPaths.toSet, newFiles)
+    withTable(ident) { (txn, ns, t, branch) =>
+      GraftCatalog.stageTableEdit(storage, txn, ns, t, actionType,
+        GraftCatalog.filesArgs(newFiles))(
+        GraftCatalog.applyFilesCommit(_, _, ns, t, op, edit, branch))
     }
   }
 
@@ -967,18 +924,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
   private[spark] def commitRowDelta(ident: Identifier,
       newFiles: Seq[graft.format.DataFileEntry],
       posDeletes: Seq[graft.format.PosDeleteFile], op: String): Unit = {
-    val ns = ns1(ident.namespace())
-    val (t, branch) = GraftCatalog.splitBranch(ident.name())
     val edit = graft.format.AddRowDeltas(newFiles, posDeletes)
-    inTxn { txn =>
-      applyFilesCommit(storage, txn.runningRoot, ns, t, op, edit, branch)
-      txn.replays += ((s, r) => applyFilesCommit(s, r, ns, t, op, edit, branch))
-      val cd = Graft.catalogDef(storage, txn.runningRoot)
-      txn.record(Action(ActionType.TableUpdate,
-        ObjectKeys.tableKey(ns, t, cd),
-        Map("files" -> newFiles.map(_.path).mkString(","),
-          "deleteFiles" -> posDeletes.map(_.path).mkString(",")) ++
-          graft.format.StatsRanges.args(newFiles)))
+    withTable(ident) { (txn, ns, t, branch) =>
+      GraftCatalog.stageTableEdit(storage, txn, ns, t, ActionType.TableUpdate,
+        GraftCatalog.filesArgs(newFiles) +
+          ("deleteFiles" -> posDeletes.map(_.path).mkString(",")))(
+        GraftCatalog.applyFilesCommit(_, _, ns, t, op, edit, branch))
     }
   }
 
@@ -1003,27 +954,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
   private[spark] def commitKeyDelta(ident: Identifier,
       newFiles: Seq[graft.format.DataFileEntry],
       eqDeletes: Seq[graft.format.EqDeleteFile], op: String): Unit = {
-    val ns = ns1(ident.namespace())
-    val (t, branch) = GraftCatalog.splitBranch(ident.name())
     val edit = graft.format.AddUpsert(newFiles, eqDeletes)
-    inTxn { txn =>
+    withTable(ident) { (txn, ns, t, branch) =>
       val baseSeq = headSeqOf(storage, txn.runningRoot, ns, t, branch)
-      applyFilesCommit(storage, txn.runningRoot, ns, t, op, edit, branch)
-      txn.replays += { (s, r) =>
-        val nowSeq = headSeqOf(s, r, ns, t, branch)
-        if (nowSeq != baseSeq) throw new IllegalStateException(
-          s"equality-delete MERGE on $ns.$t lost a race with a concurrent " +
-            s"commit (base seq $baseSeq, now $nowSeq): the merge scan never " +
-            "observed the concurrent rows its deletes would cover — rerun " +
-            "the MERGE")
-        applyFilesCommit(s, r, ns, t, op, edit, branch)
-      }
-      val cd = Graft.catalogDef(storage, txn.runningRoot)
-      txn.record(Action(ActionType.TableUpdate,
-        ObjectKeys.tableKey(ns, t, cd),
-        Map("files" -> newFiles.map(_.path).mkString(","),
-          "deleteFiles" -> eqDeletes.map(_.path).mkString(",")) ++
-          graft.format.StatsRanges.args(newFiles)))
+      GraftCatalog.stageTableEdit(storage, txn, ns, t, ActionType.TableUpdate,
+        GraftCatalog.filesArgs(newFiles) +
+          ("deleteFiles" -> eqDeletes.map(_.path).mkString(",")),
+        guard = { (s, r) =>
+          val nowSeq = headSeqOf(s, r, ns, t, branch)
+          if (nowSeq != baseSeq) throw new IllegalStateException(
+            s"equality-delete MERGE on $ns.$t lost a race with a concurrent " +
+              s"commit (base seq $baseSeq, now $nowSeq): the merge scan never " +
+              "observed the concurrent rows its deletes would cover — rerun " +
+              "the MERGE")
+        })(
+        GraftCatalog.applyFilesCommit(_, _, ns, t, op, edit, branch))
     }
   }
 
@@ -1039,52 +984,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
       eqDeletes: Seq[graft.format.EqDeleteFile],
       overwrite: Boolean,
       epochKey: (String, Long)): Unit = {
-    val ns = ns1(ident.namespace())
-    val (t, branch) = GraftCatalog.splitBranch(ident.name())
     val edit =
       if (eqDeletes.nonEmpty) graft.format.AddUpsert(newFiles, eqDeletes)
       else if (overwrite) graft.format.OverwriteFiles(newFiles)
       else graft.format.AppendFiles(newFiles)
     val op = if (eqDeletes.nonEmpty) "upsert"
       else if (overwrite) "overwrite" else "append"
-    inTxn { txn =>
-      applyFilesCommit(storage, txn.runningRoot, ns, t, op, edit, branch,
-        Some(epochKey))
-      txn.replays += ((s, r) => applyFilesCommit(s, r, ns, t, op, edit,
-        branch, Some(epochKey)))
-      val cd = Graft.catalogDef(storage, txn.runningRoot)
-      txn.record(Action(
+    withTable(ident) { (txn, ns, t, branch) =>
+      GraftCatalog.stageTableEdit(storage, txn, ns, t,
         if (eqDeletes.nonEmpty || overwrite) ActionType.TableUpdate
         else ActionType.TableInsert,
-        ObjectKeys.tableKey(ns, t, cd),
-        Map("files" -> newFiles.map(_.path).mkString(","),
-          "epoch" -> s"${epochKey._1}:${epochKey._2}") ++
-          graft.format.StatsRanges.args(newFiles))
-      )
+        GraftCatalog.filesArgs(newFiles) +
+          ("epoch" -> s"${epochKey._1}:${epochKey._2}"))(
+        GraftCatalog.applyFilesCommit(_, _, ns, t, op, edit, branch,
+          Some(epochKey)))
     }
   }
-
-  /** Apply one table snapshot commit against a running root — re-reads
-    * the table def FROM THAT ROOT so replays merge with whatever the
-    * winner committed.
-    */
-  private def applyTableCommit(s: StorageOps, root: TreeRoot, ns: String,
-      t: String, op: String, newFiles: Seq[graft.format.DataFileEntry],
-      overwrite: Boolean, branch: Option[String] = None): Unit =
-    applyFilesCommit(s, root, ns, t, op,
-      if (overwrite) graft.format.OverwriteFiles(newFiles)
-      else graft.format.AppendFiles(newFiles), branch)
-
-  /** Row-level replace against a running root: on a rebase replay the
-    * replaced paths are removed from WHATEVER the winner committed —
-    * an append that raced this rewrite keeps its files.
-    */
-  private def applyReplaceCommit(s: StorageOps, root: TreeRoot, ns: String,
-      t: String, op: String, replaced: Set[String],
-      newFiles: Seq[graft.format.DataFileEntry],
-      branch: Option[String] = None, deleteSql: String = ""): Unit =
-    applyFilesCommit(s, root, ns, t, op,
-      graft.format.ReplaceFiles(replaced, newFiles, deleteSql), branch)
 
   /** Head-snapshot commit sequence of a table (or its branch) as seen
     * from `root`; -1 for an empty table. One metadata read — used by
@@ -1101,12 +1016,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
     val meta = TableMetadata.read(s, td.metadataLocation)
     meta.headSnapshot(s, branch).map(_.seq).getOrElse(-1L)
   }
-
-  private def applyFilesCommit(s: StorageOps, root: TreeRoot, ns: String,
-      t: String, op: String, edit: graft.format.FilesEdit,
-      branch: Option[String] = None,
-      epochKey: Option[(String, Long)] = None): Unit =
-    GraftCatalog.applyFilesCommit(s, root, ns, t, op, edit, branch, epochKey)
 
   // ---------------- views ----------------
 
@@ -1247,49 +1156,85 @@ object GraftCatalog {
   def streamEpochProp(queryId: String): String =
     s"graft.streaming.epoch.$queryId"
 
-  /** Apply one table snapshot commit against a running root — re-reads
-    * the table def FROM THAT ROOT so replays merge with whatever a
-    * racing winner committed. Shared by the catalog's write paths and
-    * the REST facade's external-commit endpoint (identical semantics
-    * whichever door a commit arrives through).
+  /** Stage one table edit in `txn`, the way every table commit goes:
+    * `apply` runs on the running root now, the same closure (after
+    * `guard`) replays on the winner's root when the commit loses a
+    * race, and the action is recorded under the table's key. `apply`
+    * must re-read what it builds on from the root it is given (as
+    * [[editTable]] does), so a replay merges with what the winner
+    * committed.
     */
-  private[graft] def applyFilesCommit(s: StorageOps, root: TreeRoot,
-      ns: String, t: String, op: String, edit: graft.format.FilesEdit,
-      branch: Option[String] = None,
-      epochKey: Option[(String, Long)] = None): Unit = {
+  private[graft] def stageTableEdit(s: StorageOps, txn: Transaction,
+      ns: String, t: String, actionType: String,
+      args: Map[String, String] = Map.empty,
+      guard: (StorageOps, TreeRoot) => Unit = (_, _) => ())(
+      apply: (StorageOps, TreeRoot) => Unit): Unit = {
+    apply(s, txn.runningRoot)
+    txn.replays += { (s2, r) => guard(s2, r); apply(s2, r) }
+    txn.record(Action(actionType,
+      ObjectKeys.tableKey(ns, t, Graft.catalogDef(s, txn.runningRoot)), args))
+  }
+
+  /** Action args of a commit that adds `files`: their paths and value
+    * ranges (the serializable check's append refinement).
+    */
+  private[graft] def filesArgs(files: Seq[graft.format.DataFileEntry])
+      : Map[String, String] =
+    Map("files" -> files.map(_.path).mkString(",")) ++
+      graft.format.StatsRanges.args(files)
+
+  /** Edit the metadata of table `ns.t` in `root`: read its def from
+    * that root, transform the metadata with `f`, write the new
+    * metadata document and a def pointing at it, and put that def
+    * under the table's key. Writes nothing when `f` returns its input.
+    */
+  private[graft] def editTable(s: StorageOps, root: TreeRoot, ns: String,
+      t: String)(f: (StorageOps, TableDef, TableMetadata) => TableMetadata)
+      : Unit = {
     val cd = Graft.catalogDef(s, root)
     val key = ObjectKeys.tableKey(ns, t, cd)
     val defPath = TreeOps.searchValue(s, root, key).getOrElse(
       throw new NoSuchTableException(Identifier.of(Array(ns), t)))
     val td = Json.read(s.read(defPath), classOf[TableDef])
     val meta = TableMetadata.read(s, td.metadataLocation)
-    // streaming epoch idempotence: a (queryId, epoch) at or below the
-    // recorded watermark already committed — replaying it would
-    // double-apply the batch
-    val alreadyCommitted = epochKey.exists { case (q, e) =>
-      meta.properties.get(GraftCatalog.streamEpochProp(q)).exists(_.toLong >= e)
-    }
-    if (alreadyCommitted) return
-    val inlineMax = td.properties.get(graft.format.Manifests.InlineMaxProp)
-      .map(_.toInt).getOrElse(graft.format.Manifests.InlineMaxDefault)
-    val snapsInlineMax = td.properties.get(graft.format.SnapshotLog.InlineMaxProp)
-      .map(_.toInt).getOrElse(graft.format.SnapshotLog.InlineMaxDefault)
-    val meta2a = meta.withSnapshotEdit(s,
-      GraftCatalog.tableManifestDir(ns, t), op, edit, inlineMax, snapsInlineMax,
-      branch)
-    val meta2 = epochKey match {
-      case Some((q, e)) => meta2a.copy(properties =
-        meta2a.properties + (GraftCatalog.streamEpochProp(q) -> e.toString))
-      case None => meta2a
-    }
+    val meta2 = f(s, td, meta)
+    if (meta2 eq meta) return
     val metaPath = FileLocations.tableMetadataPath(ns, t)
     TableMetadata.write(s, metaPath, meta2)
-    val td2 = td.copy(metadataLocation = metaPath,
-      previousMetadataLocation = Some(td.metadataLocation))
     val defPath2 = FileLocations.newTableDefPath(ns, t)
-    s.writeAtomic(defPath2, Json.write(td2))
+    s.writeAtomic(defPath2, Json.write(td.copy(metadataLocation = metaPath,
+      previousMetadataLocation = Some(td.metadataLocation))))
     TreeOps.setValue(s, root, key, Some(defPath2), cd.order)
   }
+
+  /** Commit one file-level snapshot edit to table `ns.t` in `root` (of
+    * its branch, if given), whichever door the commit arrives through:
+    * the catalog's writes, maintenance, the REST facade. A streaming
+    * `epochKey` at or below the table's recorded watermark already
+    * committed and changes nothing.
+    */
+  private[graft] def applyFilesCommit(s: StorageOps, root: TreeRoot,
+      ns: String, t: String, op: String, edit: graft.format.FilesEdit,
+      branch: Option[String] = None,
+      epochKey: Option[(String, Long)] = None): Unit =
+    editTable(s, root, ns, t) { (s, td, meta) =>
+      if (epochKey.exists { case (q, e) =>
+          meta.properties.get(streamEpochProp(q)).exists(_.toLong >= e) })
+        meta
+      else {
+        val inlineMax = td.properties.get(graft.format.Manifests.InlineMaxProp)
+          .map(_.toInt).getOrElse(graft.format.Manifests.InlineMaxDefault)
+        val snapsInlineMax = td.properties
+          .get(graft.format.SnapshotLog.InlineMaxProp)
+          .map(_.toInt).getOrElse(graft.format.SnapshotLog.InlineMaxDefault)
+        val edited = meta.withSnapshotEdit(s, tableManifestDir(ns, t), op,
+          edit, inlineMax, snapsInlineMax, branch)
+        epochKey.fold(edited) { case (q, e) =>
+          edited.copy(properties =
+            edited.properties + (streamEpochProp(q) -> e.toString))
+        }
+      }
+    }
 
   /** TableDef property: comma-separated LOGICAL key columns for
     * streaming upserts — writeStream to the table commits each epoch

@@ -3,6 +3,7 @@ package graft.storage
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.security.MessageDigest
+import java.util.HexFormat
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -64,8 +65,7 @@ trait ObjectStoreClient {
 
 object ObjectStoreClient {
   private[storage] def md5(data: Array[Byte]): String =
-    MessageDigest.getInstance("MD5").digest(data)
-      .map(b => f"${b & 0xff}%02x").mkString
+    HexFormat.of().formatHex(MessageDigest.getInstance("MD5").digest(data))
 }
 
 /** Pure in-memory store: the semantics of S3 conditional PUT with

@@ -4,7 +4,9 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
-import graft.objects.Json
+import graft.catalog.Graft
+import graft.format.TableMetadata
+import graft.objects.{Json, NamespaceDef}
 import graft.spark.GraftCatalog
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -186,6 +188,37 @@ class IcebergStaticSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("outside the catalog root"))
     } finally txn.close()
+  }
+
+  test("an import that loses the commit race keeps its files") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ist.ns8")
+    spark.sql("CREATE TABLE ist.ns8.src (id BIGINT)")
+    spark.sql("INSERT INTO ist.ns8.src VALUES (1), (2), (3)")
+    spark.sql("INSERT INTO ist.ns8.src VALUES (4)")
+    val rel = IcebergStatic.export(storage, "ns8", "src")
+    val txn = Graft.beginTransaction(storage)
+    try {
+      IcebergStatic.importTable(storage, txn, "ns8", "copy", rel)
+      // another transaction commits first, to another namespace
+      val other = Graft.beginTransaction(storage)
+      try {
+        Graft.createNamespace(storage, other, NamespaceDef("ns8_other"))
+        Graft.commitTransaction(storage, other)
+      } finally other.close()
+      Graft.commitTransaction(storage, txn) // loses the race: rebases
+    } finally txn.close()
+    def files(t: String): Set[String] = {
+      val txn = Graft.beginTransaction(storage)
+      try TableMetadata.read(storage,
+        Graft.describeTable(storage, txn, "ns8", t).metadataLocation)
+        .currentFiles(storage).map(_.path).toSet
+      finally txn.close()
+    }
+    assert(files("src").nonEmpty && files("copy") == files("src"))
+    assert(spark.sql("SELECT count(*) FROM ist.ns8.copy")
+      .collect()(0).getLong(0) == 4L)
+    assert(spark.sql("SHOW NAMESPACES IN ist").collect()
+      .exists(_.getString(0) == "ns8_other"))
   }
 
   test("empty table (no snapshot) imports as an empty table") {

@@ -2,6 +2,8 @@ package graft.spark
 
 import java.nio.file.Files
 
+import graft.objects.FileLocations
+import graft.storage.{StorageConf, StorageOps}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -262,6 +264,65 @@ abstract class ConcurrentWriteContract extends AnyFunSuite {
       .sameElements(Array(1L, 9L)), "tb holds base + REST")
   }
 
+  test("every table edit kind survives a rebase over another table's commit") {
+    // A stages one edit on its own table, B commits to a bystander
+    // table first, A commits: A's rebase replays its edit on B's root
+    // and must leave exactly the rows the edit alone would
+    spark.sql(s"CREATE TABLE $catA.ns1.bystander (k BIGINT)")
+    val base = Seq((0L, "a"), (1L, "b"), (2L, "c"))
+    val kinds = Seq[(String, String, String => String, Seq[(Long, String)])](
+      ("insert overwrite", "", t => s"INSERT OVERWRITE $t VALUES (7, 'o')",
+        Seq((7L, "o"))),
+      ("copy-on-write delete", "", t => s"DELETE FROM $t WHERE k = 1",
+        Seq((0L, "a"), (2L, "c"))),
+      ("merge-on-read delete", "'graft.delete.mode' = 'merge-on-read'",
+        t => s"DELETE FROM $t WHERE k = 1", Seq((0L, "a"), (2L, "c"))),
+      ("position-delta update", "'graft.update.mode' = 'merge-on-read'",
+        t => s"UPDATE $t SET v = 'u' WHERE k = 1",
+        Seq((0L, "a"), (1L, "u"), (2L, "c"))),
+      ("position-delta merge", "'graft.merge.mode' = 'merge-on-read'",
+        t => s"""MERGE INTO $t AS tgt
+                 USING (SELECT 1L AS k, 'm' AS v UNION ALL SELECT 3L, 'n') AS src
+                 ON tgt.k = src.k
+                 WHEN MATCHED THEN UPDATE SET v = src.v
+                 WHEN NOT MATCHED THEN INSERT *""",
+        Seq((0L, "a"), (1L, "m"), (2L, "c"), (3L, "n"))),
+      ("compact_table", "",
+        t => s"CALL $catA.system.compact_table(namespace => 'ns1', " +
+          s"table => '${t.split('.').last}')",
+        base))
+    for (((kind, props, stmt, want), i) <- kinds.zipWithIndex) {
+      val t = s"$catA.ns1.kind$i"
+      spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING)" +
+        (if (props.isEmpty) "" else s" TBLPROPERTIES ($props)"))
+      // two commits, so the table has two files for compaction to merge
+      spark.sql(s"INSERT INTO $t VALUES (0, 'a'), (1, 'b')")
+      spark.sql(s"INSERT INTO $t VALUES (2, 'c')")
+      val bystanderBefore = spark.table(s"$catB.ns1.bystander").count()
+      val bWins = () => { spark.sql(s"INSERT INTO $catB.ns1.bystander VALUES ($i)"); () }
+      if (kind == "compact_table") {
+        // compaction commits in a transaction of its own: B commits
+        // just before compaction's first root write
+        val a = cat(catA)
+        val own = a.storage
+        a.storage = new RaceOps(own, bWins)
+        try spark.sql(stmt(t)).collect() finally a.storage = own
+        assert(spark.table(s"$catB.ns1.`kind$i$$files`").count() == 1,
+          s"$kind: the compacted table holds one file")
+      } else {
+        cat(catA).beginTransaction()
+        spark.sql(stmt(t))
+        bWins()
+        cat(catA).commitTransaction()
+      }
+      assert(spark.table(s"$catB.ns1.bystander").count() == bystanderBefore + 1,
+        s"$kind: B's commit is intact")
+      val rows = spark.table(s"$catB.ns1.kind$i").collect()
+        .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      assert(rows == want, s"$kind after the rebase: $rows")
+    }
+  }
+
   test("update/update race across sessions aborts the loser") {
     spark.sql(s"CREATE TABLE $catA.ns1.u (k BIGINT)")
     spark.sql(s"INSERT INTO $catA.ns1.u VALUES (1)")
@@ -273,6 +334,36 @@ abstract class ConcurrentWriteContract extends AnyFunSuite {
     // winner's overwrite is the surviving state
     assert(spark.table(s"$catB.ns1.u").collect().map(_.getLong(0)).sameElements(Array(200L)))
   }
+}
+
+/** Runs `beforeRootWrite` once, just before the first catalog root
+  * (`vn/<bits>`) write through this handle, so a commit made there
+  * through another handle wins the version race.
+  */
+private class RaceOps(inner: StorageOps, beforeRootWrite: () => Unit)
+    extends StorageOps {
+  private var pending = true
+  override def root: String = inner.root
+  override def exists(rel: String): Boolean = inner.exists(rel)
+  override def read(rel: String): Array[Byte] = inner.read(rel)
+  override def sizeOf(rel: String): Long = inner.sizeOf(rel)
+  override def prepareToReadLocal(rel: String): java.nio.file.Path =
+    inner.prepareToReadLocal(rel)
+  override def reopenConf: StorageConf = inner.reopenConf
+  override def writeAtomic(rel: String, data: Array[Byte]): Unit = {
+    if (pending && FileLocations.isRootNodePath(rel)) {
+      pending = false
+      beforeRootWrite()
+    }
+    inner.writeAtomic(rel, data)
+  }
+  override def overwrite(rel: String, data: Array[Byte]): Unit = inner.overwrite(rel, data)
+  override def deleteBatch(rels: Seq[String]): Unit = inner.deleteBatch(rels)
+  override def listPrefix(prefix: String): Seq[String] = inner.listPrefix(prefix)
+  override def listDeep(prefix: String): Seq[String] = inner.listDeep(prefix)
+  override def move(srcRel: String, dstRel: String): Unit = inner.move(srcRel, dstRel)
+  override def deleteTree(prefix: String): Unit = inner.deleteTree(prefix)
+  override def absolute(rel: String): String = inner.absolute(rel)
 }
 
 class ConcurrentWriteSpec extends ConcurrentWriteContract {

@@ -45,6 +45,21 @@ class DtxnProtocolSpec extends AnyFunSuite {
     assert(!graft.catalog.Graft.distTransactionExists(cat.storage, "dtxn_rb"))
   }
 
+  test("dtxn merge-on-read DELETE stays invisible until publish") {
+    spark.sql("""CREATE TABLE dcat.ns1.m (k BIGINT)
+      TBLPROPERTIES ('graft.delete.mode' = 'merge-on-read')""")
+    spark.sql("INSERT INTO dcat.ns1.m VALUES (1), (2), (3)")
+    def keys(t: String): Seq[Long] =
+      spark.table(t).collect().map(_.getLong(0)).sorted.toSeq
+    spark.sql("CREATE NAMESPACE dcat.sys.dtxns.dtxn_mor")
+    spark.sql("DELETE FROM dcat.sys.dtxns.dtxn_mor.ns1.m WHERE k = 2")
+    assert(keys("dcat.sys.dtxns.dtxn_mor.ns1.m") == Seq(1L, 3L))
+    assert(keys("dcat.ns1.m") == Seq(1L, 2L, 3L))
+    spark.sql(
+      "ALTER NAMESPACE dcat.sys.dtxns.dtxn_mor SET PROPERTIES ('commit'='true')")
+    assert(keys("dcat.ns1.m") == Seq(1L, 3L))
+  }
+
   test("catalog-wide object listing: sys.objects") {
     val objs = spark.table("dcat.sys.objects").collect()
     assert(objs.exists(r => r.getString(0) == "namespace" && r.getString(1) == "ns1"))

@@ -191,6 +191,14 @@ class ObjectStoreReadCacheSpec extends AnyFunSuite {
     assert(counting.gets.get() == 1)
   }
 
+  test("etag is the lowercase hex MD5 of the object") {
+    val client = new InMemoryObjectStoreClient
+    client.put("empty", Array.emptyByteArray)
+    client.put("abc", "abc".getBytes("UTF-8"))
+    assert(client.head("empty").contains("d41d8cd98f00b204e9800998ecf8427e"))
+    assert(client.head("abc").contains("900150983cd24fb0d6963f7d28e17f72"))
+  }
+
   test("write-once keys: once cached, a read costs no HEAD, size or GET") {
     writeOnceKeys.foreach(k => assert(FileLocations.isWriteOnce(k), k))
     mutableKeys.foreach(k => assert(!FileLocations.isWriteOnce(k), k))
