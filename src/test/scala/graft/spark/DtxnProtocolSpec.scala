@@ -45,19 +45,32 @@ class DtxnProtocolSpec extends AnyFunSuite {
     assert(!graft.catalog.Graft.distTransactionExists(cat.storage, "dtxn_rb"))
   }
 
-  test("dtxn merge-on-read DELETE stays invisible until publish") {
-    spark.sql("""CREATE TABLE dcat.ns1.m (k BIGINT)
-      TBLPROPERTIES ('graft.delete.mode' = 'merge-on-read')""")
-    spark.sql("INSERT INTO dcat.ns1.m VALUES (1), (2), (3)")
-    def keys(t: String): Seq[Long] =
-      spark.table(t).collect().map(_.getLong(0)).sorted.toSeq
-    spark.sql("CREATE NAMESPACE dcat.sys.dtxns.dtxn_mor")
-    spark.sql("DELETE FROM dcat.sys.dtxns.dtxn_mor.ns1.m WHERE k = 2")
-    assert(keys("dcat.sys.dtxns.dtxn_mor.ns1.m") == Seq(1L, 3L))
-    assert(keys("dcat.ns1.m") == Seq(1L, 2L, 3L))
+  test("dtxn DELETE and UPDATE stay invisible until publish") {
+    // one table per write mode; all writes land in one dtxn
+    val kinds = Seq(
+      ("mor", "'graft.delete.mode' = 'merge-on-read'",
+        "DELETE FROM %s WHERE k = 2", Seq((1L, "a"), (3L, "c"))),
+      ("cow", "", "DELETE FROM %s WHERE k = 2", Seq((1L, "a"), (3L, "c"))),
+      ("pos", "'graft.update.mode' = 'merge-on-read'",
+        "UPDATE %s SET v = 'u' WHERE k = 2",
+        Seq((1L, "a"), (2L, "u"), (3L, "c"))))
+    val base = Seq((1L, "a"), (2L, "b"), (3L, "c"))
+    def rows(t: String): Seq[(Long, String)] = spark.table(t).collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    for ((t, props, _, _) <- kinds) {
+      spark.sql(s"CREATE TABLE dcat.ns1.$t (k BIGINT, v STRING)" +
+        (if (props.isEmpty) "" else s" TBLPROPERTIES ($props)"))
+      spark.sql(s"INSERT INTO dcat.ns1.$t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    }
+    spark.sql("CREATE NAMESPACE dcat.sys.dtxns.dtxn_dml")
+    for ((t, _, stmt, want) <- kinds) {
+      spark.sql(stmt.format(s"dcat.sys.dtxns.dtxn_dml.ns1.$t"))
+      assert(rows(s"dcat.sys.dtxns.dtxn_dml.ns1.$t") == want, t)
+      assert(rows(s"dcat.ns1.$t") == base, s"$t leaked before publish")
+    }
     spark.sql(
-      "ALTER NAMESPACE dcat.sys.dtxns.dtxn_mor SET PROPERTIES ('commit'='true')")
-    assert(keys("dcat.ns1.m") == Seq(1L, 3L))
+      "ALTER NAMESPACE dcat.sys.dtxns.dtxn_dml SET PROPERTIES ('commit'='true')")
+    for ((t, _, _, want) <- kinds) assert(rows(s"dcat.ns1.$t") == want, t)
   }
 
   test("catalog-wide object listing: sys.objects") {
