@@ -142,10 +142,6 @@ object Maintenance {
     val ns = ident.namespace()(0)
     val t = ident.name()
     val txn = Graft.beginTransaction(storage)
-    // close the txn on EVERY exit — not-applicable returns, Spark-job
-    // failures, a lost commit race, AND the successful commit (the
-    // commit path does not release the transaction's tree-root Arrow
-    // buffers; Transaction.close after a commit is safe and required)
     try {
     val td = Graft.describeTable(storage, txn, ns, t)
     val meta = TableMetadata.read(storage, td.metadataLocation)
@@ -325,7 +321,7 @@ object Maintenance {
     var deadStats = Option.empty[graft.format.StatsFileRef]
     GraftCatalog.stageTableEdit(storage, txn, ns, ident.name(),
       graft.txn.ActionType.AlterTable)(
-      GraftCatalog.editTable(_, _, ns, ident.name()) { (_, td, meta) =>
+      GraftCatalog.editTable(_, _, ns, ident.name())(keepProps { (_, td, meta) =>
         // commit timestamps are monotone with ids, so "at/after the
         // cutoff" is a suffix — age-retention folds into a larger keepLast.
         // Segment refs carry ts bounds: only a cutoff-straddling segment
@@ -391,7 +387,7 @@ object Maintenance {
             td.properties.get(graft.format.SnapshotLog.InlineMaxProp)
               .map(_.toInt).getOrElse(graft.format.SnapshotLog.InlineMaxDefault))
         }
-      })
+      }))
     if (expired == 0) return 0
     Graft.commitTransaction(storage, txn)
     if (deadManifests.nonEmpty) storage.deleteBatch(deadManifests)
@@ -1393,17 +1389,12 @@ object Maintenance {
       s.copy(id = 1L, parentId = -1L, timestampMillis = now,
         operation = "snapshot", manifests = remapped)
     }
-    val props = td.properties +
-      ("graft.snapshot-source" -> s"$srcNs.${source.name()}")
-    val destMeta = TableMetadata(
-      schemaJson = meta.schemaJson,
-      currentSnapshotId = snap0.map(_.id).getOrElse(-1L),
-      snapshots = snap0.toSeq,
-      properties = props)
-    val metaPath = FileLocations.tableMetadataPath(dstNs, dest.name())
-    TableMetadata.write(storage, metaPath, destMeta)
-    Graft.createTable(storage, txn, graft.objects.TableDef(dest.name(),
-      dstNs, metadataLocation = metaPath, properties = props))
+    GraftCatalog.createTable(storage, txn, dstNs, dest.name(),
+      TableMetadata(
+        schemaJson = meta.schemaJson,
+        currentSnapshotId = snap0.map(_.id).getOrElse(-1L),
+        snapshots = snap0.toSeq),
+      td.properties + ("graft.snapshot-source" -> s"$srcNs.${source.name()}"))
     Graft.commitTransaction(storage, txn)
     snap0.map(_.totalFiles).getOrElse(0L)
   }
@@ -1412,39 +1403,23 @@ object Maintenance {
     * disaster-recovery / hand-off path (a metadata doc from an export,
     * a dropped table whose objects survive, a doc shipped from another
     * catalog on the same storage). No objects are copied or rewritten:
-    * the def simply points at the document, whose property mirror
-    * (written by create/alter since it exists) reconstructs the
-    * partition spec and table properties. Returns the snapshot count
-    * now reachable.
+    * the def simply points at the document. Every create and edit
+    * writes the document's properties as the def's properties plus
+    * the metadata-only stream-epoch watermarks (the property mirror,
+    * [[GraftCatalog.editTable]]), so the def rebuilt from them keeps
+    * the partition spec and the table properties, and a resumed
+    * stream keeps its exactly-once watermark. An Iceberg
+    * `metadata.json` is adopted through the static-format bridge
+    * ([[GraftCatalog.registerTable]], shared with the REST register
+    * route). Returns the snapshot count now reachable.
     */
   def registerTable(cat: GraftCatalog, ident: Identifier,
-      metadataLocationIn: String): Long = {
-    val storage = cat.storage
-    // absolute locations (e.g. export_iceberg's return value) map back
-    // onto storage-relative keys; relative ones pass through
-    val metadataLocation =
-      if (metadataLocationIn.startsWith(storage.root))
-        metadataLocationIn.stripPrefix(storage.root).stripPrefix("/")
-      else metadataLocationIn
-    val doc = storage.read(metadataLocation)
-    if (graft.serve.IcebergStatic.isIcebergMetadata(doc)) {
-      // an ICEBERG metadata.json: adopt its current snapshot's live
-      // files through the static-format bridge (same path as the REST
-      // register endpoint)
-      val txn = Graft.beginTransaction(storage)
-      graft.serve.IcebergStatic.importTable(storage, txn,
-        ident.namespace()(0), ident.name(), metadataLocation)
-      Graft.commitTransaction(storage, txn)
-      return 1L
-    }
-    // read validates the document before anything is committed
-    val meta = TableMetadata.read(storage, metadataLocation)
-    val txn = Graft.beginTransaction(storage)
-    Graft.createTable(storage, txn, graft.objects.TableDef(ident.name(),
-      ident.namespace()(0), metadataLocation = metadataLocation,
-      properties = meta.properties))
-    Graft.commitTransaction(storage, txn)
-    meta.totalSnapshots
+      metadataLocation: String): Long = {
+    val txn = Graft.beginTransaction(cat.storage)
+    val snaps = GraftCatalog.registerTable(cat.storage, txn,
+      ident.namespace()(0), ident.name(), metadataLocation)
+    Graft.commitTransaction(cat.storage, txn)
+    snaps
   }
 
   /** Export the table's current state as a static Iceberg table
@@ -1551,7 +1526,14 @@ object Maintenance {
       f: (graft.storage.StorageOps, TableDef, TableMetadata) => TableMetadata)
       : Unit =
     commitEdit(cat, existingTxn.getOrElse(Graft.beginTransaction(cat.storage)),
-      ns, table, op)(GraftCatalog.editTable(_, _, ns, table)(f))
+      ns, table, op)(GraftCatalog.editTable(_, _, ns, table)(keepProps(f)))
+
+  /** A metadata edit that leaves the def's properties as they are. */
+  private def keepProps(
+      f: (graft.storage.StorageOps, TableDef, TableMetadata) => TableMetadata)
+      : (graft.storage.StorageOps, TableDef, TableMetadata) =>
+        (TableMetadata, Map[String, String]) =
+    (s, td, meta) => (f(s, td, meta), td.properties)
 
   private def commitEdit(cat: GraftCatalog, txn: graft.txn.Transaction,
       ns: String, table: String, op: String)(

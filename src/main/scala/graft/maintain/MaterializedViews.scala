@@ -1173,14 +1173,6 @@ object MaterializedViews {
         groupBy.map(k => srcCur(k) <=> touched(k)).reduce(_ && _),
         "left_semi")
     }
-    // diagnostic (spec-gated): how many source files the group-scoped
-    // recompute actually reads — the IN-list prune should reach the
-    // scan's file statistics, so a sparse delete re-reads a file
-    // subset, never the corpus
-    if (spark.conf.get("spark.graft.mv.groups.debug-scan-files",
-        "false").toBoolean)
-      lastGroupsScanFiles.set(scoped.select(
-        countDistinct(col("_file"))).head.getLong(0))
     val recomputed =
       aggregate(restrict(scoped, where, keyTz), groupBy, aggs,
         tz = keyTz)
@@ -1544,13 +1536,6 @@ object MaterializedViews {
 
   private val DeltaPrefix = "__mvd_"
   private val PresentCol = "__mv_present"
-
-  /** Last group-scoped recompute's distinct source files read
-    * (diagnostic, populated only under
-    * `spark.graft.mv.groups.debug-scan-files`).
-    */
-  private[graft] val lastGroupsScanFiles =
-    new java.util.concurrent.atomic.AtomicLong(-1L)
 
   /** Does the view's state table MERGE as a DELTA (equality-delete or
     * position-delete write)? Both plan as WriteDelta, whose target scan

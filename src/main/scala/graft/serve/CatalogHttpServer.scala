@@ -6,7 +6,8 @@ import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.catalog.Graft
 import graft.format.TableMetadata
-import graft.objects.{FileLocations, Json, NamespaceDef, TableDef}
+import graft.objects.{FileLocations, Json, NamespaceDef}
+import graft.spark.GraftCatalog
 import graft.storage.StorageOps
 import graft.txn.Transaction
 
@@ -346,10 +347,8 @@ class CatalogHttpServer(storage: StorageOps, port: Int = 0,
         "table create needs name and schema")
       val name = body.get("name").asText()
       val schema = IcebergRest.fromIcebergSchema(body.get("schema"))
-      val metaPath = FileLocations.tableMetadataPath(ns, name)
-      TableMetadata.write(storage, metaPath, TableMetadata.empty(schema.json))
-      inWriteTxn(txn => Graft.createTable(storage, txn,
-        TableDef(name, ns, metadataLocation = metaPath)))
+      inWriteTxn(GraftCatalog.createTable(storage, _, ns, name,
+        TableMetadata.empty(schema.json), Map.empty))
       replyLoadTable(ex, ns, name)
     case ("GET", List("namespaces", ns, "tables", t)) =>
       replyLoadTable(ex, ns, t)
@@ -407,22 +406,7 @@ class CatalogHttpServer(storage: StorageOps, port: Int = 0,
       require(name.nonEmpty, "register needs a name")
       val loc = body.path("metadata-location").asText()
       require(loc.nonEmpty, "register needs a metadata-location")
-      val rel =
-        if (loc.startsWith(storage.root)) loc.stripPrefix(storage.root)
-          .stripPrefix("/")
-        else loc
-      require(storage.exists(rel), s"no metadata document at $loc")
-      val doc = storage.read(rel)
-      if (IcebergStatic.isIcebergMetadata(doc))
-        inWriteTxn(txn =>
-          IcebergStatic.importTable(storage, txn, ns, name, rel))
-      else {
-        // read validates the document before anything is committed
-        val meta = TableMetadata.read(storage, rel)
-        inWriteTxn(txn => Graft.createTable(storage, txn,
-          TableDef(name, ns, metadataLocation = rel,
-            properties = meta.properties)))
-      }
+      inWriteTxn(GraftCatalog.registerTable(storage, _, ns, name, loc))
       replyLoadTable(ex, ns, name)
     case ("GET", List("namespaces", ns, "views")) =>
       withReadTxn { txn =>
@@ -676,11 +660,9 @@ class CatalogHttpServer(storage: StorageOps, port: Int = 0,
         val req = Json.read(requestBody(ex), classOf[CreateTableRequest])
         require(req.name != null && req.schemaJson != null,
           "table create needs name and schemaJson")
-        val metaPath = FileLocations.tableMetadataPath(ns, req.name)
-        TableMetadata.write(storage, metaPath, TableMetadata.empty(req.schemaJson))
-        inWriteTxn(txn => Graft.createTable(storage, txn,
-          TableDef(req.name, ns, metadataLocation = metaPath,
-            properties = Option(req.properties).getOrElse(Map.empty))))
+        inWriteTxn(GraftCatalog.createTable(storage, _, ns, req.name,
+          TableMetadata.empty(req.schemaJson),
+          Option(req.properties).getOrElse(Map.empty)))
         reply(ex, 201, s"""{"created":${Json.writeString(req.name)}}""")
       case _ => reply(ex, 404, """{"error":"no such route"}""")
     }

@@ -300,49 +300,35 @@ object IcebergCommits {
       // end state would silently revert the concurrent change
       val baseSchemaJson = meta.schemaJson
       /** Merge the property updates and the schema-evolution diff into
-        * the table def AS SEEN FROM `root` (first application and
-        * rebase replays alike re-read the def, so a racing alter's
-        * unrelated properties survive; a racing SCHEMA change fails
-        * the replay with 409).
+        * the table AS SEEN FROM `root` (first application and rebase
+        * replays alike re-read the def, so a racing alter's unrelated
+        * properties survive; a racing SCHEMA change fails the replay
+        * with 409).
         */
       def applyMetaEdits(s: StorageOps, root: TreeRoot): Unit =
-        if (clientSchema != null || propSets.nonEmpty || propRemovals.nonEmpty) {
-          val cd0 = Graft.catalogDef(s, root)
-          val key = ObjectKeys.tableKey(ns, t, cd0)
-          val cur = TreeOps.searchValue(s, root, key).getOrElse(
-            throw new RequirementFailedException(s"table $ns.$t dropped"))
-          val td0 = Json.read(s.read(cur), classOf[TableDef])
-          val props0 = td0.properties ++ propSets -- propRemovals
-          var newTd = td0.copy(properties = props0)
-          if (clientSchema != null) {
-            val meta0 = TableMetadata.read(s, td0.metadataLocation)
-            if (meta0.schemaJson != baseSchemaJson)
-              throw new RequirementFailedException(
-                s"schema of $ns.$t changed during the commit; re-load " +
-                  "and retry the evolution")
-            val served = DataType.fromJson(meta0.schemaJson)
-              .asInstanceOf[StructType]
-            val (servedNode, _) = IcebergRest.toIcebergSchema(served, td0.properties)
-            val changes = IcebergSchemaDiff.diff(servedNode, clientSchema)
-            if (changes.nonEmpty) {
-              // the SAME change-application rules as native ALTER
-              val (schema2, props2, _) =
-                graft.spark.TableAlterations(served, props0, changes)
-              val metaPath =
-                graft.objects.FileLocations.tableMetadataPath(ns, t)
-              TableMetadata.write(s, metaPath, meta0.copy(
-                schemaJson = schema2.json, properties = props2))
-              newTd = td0.copy(properties = props2,
-                metadataLocation = metaPath,
-                previousMetadataLocation = Some(td0.metadataLocation))
+        if (clientSchema != null || propSets.nonEmpty || propRemovals.nonEmpty)
+          GraftCatalog.editTable(s, root, ns, t) { (_, td0, meta0) =>
+            val props0 = td0.properties ++ propSets -- propRemovals
+            if (clientSchema == null) (meta0, props0)
+            else {
+              if (meta0.schemaJson != baseSchemaJson)
+                throw new RequirementFailedException(
+                  s"schema of $ns.$t changed during the commit; re-load " +
+                    "and retry the evolution")
+              val served = DataType.fromJson(meta0.schemaJson)
+                .asInstanceOf[StructType]
+              val (servedNode, _) =
+                IcebergRest.toIcebergSchema(served, td0.properties)
+              val changes = IcebergSchemaDiff.diff(servedNode, clientSchema)
+              if (changes.isEmpty) (meta0, props0)
+              else {
+                // the SAME change-application rules as native ALTER
+                val (schema2, props2) =
+                  graft.spark.TableAlterations(served, props0, changes)
+                (meta0.copy(schemaJson = schema2.json), props2)
+              }
             }
           }
-          if (newTd != td0) {
-            val defPath = graft.objects.FileLocations.newTableDefPath(ns, t)
-            s.writeAtomic(defPath, Json.write(newTd))
-            TreeOps.setValue(s, root, key, Some(defPath), cd0.order)
-          }
-        }
       val replayGuard: (StorageOps, TreeRoot) => Unit = (s, r) =>
         assertedMain.foreach { want =>
           val now = currentSnapshotIdOf(s, r, ns, t)
@@ -360,8 +346,14 @@ object IcebergCommits {
         else ActionType.TableInsert,
         Map("files" -> cs.adds.map(_.path).mkString(",")), replayGuard) {
         (s, r) =>
-          edit.foreach(applyChecked(s, r, ns, t, op, _))
-          applyMetaEdits(s, r)
+          // a table dropped under a rebase replay is a lost race: 409
+          try {
+            edit.foreach(applyChecked(s, r, ns, t, op, _))
+            applyMetaEdits(s, r)
+          } catch {
+            case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException =>
+              throw new RequirementFailedException(s"table $ns.$t dropped")
+          }
       }
     }
   }

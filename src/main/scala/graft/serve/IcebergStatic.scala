@@ -3,7 +3,7 @@ package graft.serve
 import com.fasterxml.jackson.databind.JsonNode
 import graft.catalog.Graft
 import graft.format.{AppendFiles, DataFileEntry, TableMetadata}
-import graft.objects.{FileLocations, Json, TableDef}
+import graft.objects.{FileLocations, Json}
 import graft.spark.GraftCatalog
 import graft.storage.StorageOps
 import graft.txn.{ActionType, Transaction}
@@ -160,13 +160,10 @@ object IcebergStatic {
             "or drop the partition spec")
       }
     }
-    val metaPath = FileLocations.tableMetadataPath(ns, name)
-    TableMetadata.write(storage, metaPath, TableMetadata.empty(schema.json))
-    val props =
-      if (partCols.isEmpty) Map.empty[String, String]
-      else Map(GraftCatalog.PartitionColsProp -> partCols.mkString(","))
-    Graft.createTable(storage, txn,
-      TableDef(name, ns, metadataLocation = metaPath, properties = props))
+    GraftCatalog.createTable(storage, txn, ns, name,
+      TableMetadata.empty(schema.json),
+      if (partCols.isEmpty) Map.empty
+      else Map(GraftCatalog.PartitionColsProp -> partCols.mkString(",")))
     if (files.nonEmpty)
       GraftCatalog.stageTableEdit(storage, txn, ns, name, ActionType.TableInsert,
         GraftCatalog.filesArgs(files))(

@@ -579,49 +579,31 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
           schema.fields.partition(f => partCols.contains(f.name))
         StructType(dataFields ++ partFields)
       }
-    inTxn { txn =>
-      val metaPath = FileLocations.tableMetadataPath(ns, ident.name())
-      val props = properties.asScala.toMap ++
-        (if (partCols.nonEmpty)
-          Map(GraftCatalog.PartitionColsProp -> partCols.mkString(","))
-        else Map.empty) ++
-        (if (spec.exists(!_.isIdentity))
-          Map(GraftCatalog.PartitionSpecProp -> PartitionTransforms.render(spec))
-        else Map.empty)
-      // def properties MIRROR into the metadata document so it is
-      // self-contained: register_table can reconstruct a TableDef
-      // (partition spec included) from the document alone
-      TableMetadata.write(storage, metaPath,
-        TableMetadata.empty(storedSchema.json).copy(properties = props))
-      Graft.createTable(storage, txn, TableDef(
-        ident.name(), ns, metadataLocation = metaPath, properties = props))
-    }
+    val props = properties.asScala.toMap ++
+      (if (partCols.nonEmpty)
+        Map(GraftCatalog.PartitionColsProp -> partCols.mkString(","))
+      else Map.empty) ++
+      (if (spec.exists(!_.isIdentity))
+        Map(GraftCatalog.PartitionSpecProp -> PartitionTransforms.render(spec))
+      else Map.empty)
+    inTxn(GraftCatalog.createTable(storage, _, ns, ident.name(),
+      TableMetadata.empty(storedSchema.json), props))
     loadTable(ident)
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val ns = ns1(ident.namespace())
-    inTxn { txn =>
-      val td = Graft.describeTable(storage, txn, ns, ident.name())
-      val meta = TableMetadata.read(storage, td.metadataLocation)
-      val base = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-      // change application shared 1:1 with the REST facade's schema
-      // commits ([[TableAlterations]]) — one rule set, no drift
-      val (schema, props, actionType) =
-        TableAlterations(base, td.properties, changes.toSeq)
-      val metaPath = FileLocations.tableMetadataPath(ns, ident.name())
-      TableMetadata.write(storage, metaPath,
-        meta.copy(schemaJson = schema.json, properties = props))
-      Graft.alterTable(storage, txn,
-        td.copy(metadataLocation = metaPath,
-          previousMetadataLocation = Some(td.metadataLocation),
-          properties = props),
-        actionType)
+    val (ns, t) = editDef(ident, TableAlterations.actionType(changes)) {
+      (td, meta) =>
+        val base = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+        // change application shared 1:1 with the REST facade's schema
+        // commits ([[TableAlterations]]) — one rule set, no drift
+        val (schema, props) = TableAlterations(base, td.properties, changes)
+        (meta.copy(schemaJson = schema.json), props)
     }
     // if this table is a materialized view (renamed column, stripped
     // definition property, watermark bump), cached rewrite decisions
     // about it are void
-    GraftMvRewrite.invalidate(name(), s"$ns.${ident.name()}")
+    GraftMvRewrite.invalidate(name(), s"$ns.$t")
     loadTable(ident)
   }
 
@@ -635,11 +617,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
     * ordinary columns whether or not they currently drive layout.
     */
   private[graft] def evolvePartitionSpec(ident: Identifier, add: Boolean,
-      field: PartitionField): Unit = {
-    val ns = ns1(ident.namespace())
-    inTxn { txn =>
-      val td = Graft.describeTable(storage, txn, ns, ident.name())
-      val meta = TableMetadata.read(storage, td.metadataLocation)
+      field: PartitionField): Unit =
+    editDef(ident, ActionType.AlterTable) { (td, meta) =>
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       // user-facing column name → physical (rename-safe, like the spec
       // recorded at CREATE)
@@ -661,25 +640,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
           cur.filterNot(_.dirName == physField.dirName)
         }
       val identCols = next.filter(_.isIdentity).map(_.col)
-      val props = td.properties -
+      (meta, td.properties -
         GraftCatalog.PartitionColsProp - GraftCatalog.PartitionSpecProp ++
         (if (identCols.nonEmpty)
           Map(GraftCatalog.PartitionColsProp -> identCols.mkString(","))
         else Map.empty) ++
         (if (next.exists(!_.isIdentity))
           Map(GraftCatalog.PartitionSpecProp -> PartitionTransforms.render(next))
-        else Map.empty)
-      // keep the metadata document's property mirror current (see
-      // createTable: register_table reconstructs the def from it)
-      val metaPath = FileLocations.tableMetadataPath(ns, ident.name())
-      TableMetadata.write(storage, metaPath, meta.copy(properties = props))
-      Graft.alterTable(storage, txn,
-        td.copy(metadataLocation = metaPath,
-          previousMetadataLocation = Some(td.metadataLocation),
-          properties = props),
-        ActionType.AlterTable)
+        else Map.empty))
     }
-  }
 
   override def dropTable(ident: Identifier): Boolean =
     try inTxn { txn =>
@@ -699,6 +668,23 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
   }
 
   // ---------------- write commit (called from GraftAppendBatchWrite) ----------------
+
+  /** Change the def properties and metadata of the table `ident`
+    * names as one table edit (ALTER, partition evolution); returns its
+    * namespace and name. A branch identifier is refused: the def and
+    * its schema belong to the whole table.
+    */
+  private def editDef(ident: Identifier, actionType: String)(
+      f: (TableDef, TableMetadata) => (TableMetadata, Map[String, String]))
+      : (String, String) =
+    withTable(ident) { (txn, ns, t, branch) =>
+      branch.foreach(b => throw new IllegalArgumentException(
+        s"cannot alter branch $b of $ns.$t: ALTER changes the whole " +
+          s"table — alter $ns.$t instead"))
+      GraftCatalog.stageTableEdit(storage, txn, ns, t, actionType)(
+        GraftCatalog.editTable(_, _, ns, t)((_, td, meta) => f(td, meta)))
+      (ns, t)
+    }
 
   /** Run one table write in the transaction `ident` addresses, with
     * the namespace, table and branch it names. `sys.dtxns.<id>.<ns>.<t>`
@@ -1153,8 +1139,62 @@ object GraftCatalog {
   /** Metadata property recording the newest committed streaming epoch
     * for one writeStream query (idempotent micro-batch commits).
     */
-  def streamEpochProp(queryId: String): String =
-    s"graft.streaming.epoch.$queryId"
+  private val StreamEpochPrefix = "graft.streaming.epoch."
+  def streamEpochProp(queryId: String): String = StreamEpochPrefix + queryId
+
+  /** Engine state that lives only in the metadata document's
+    * properties, never in the def's: the stream-epoch watermarks.
+    */
+  private def isMetadataOnly(key: String): Boolean =
+    key.startsWith(StreamEpochPrefix)
+
+  /** The property mirror: a metadata document's properties are its
+    * def's `props` plus the metadata-only keys `meta` carries, so
+    * [[registerTable]] can rebuild the def from the document alone.
+    */
+  private def mirrored(meta: TableMetadata, props: Map[String, String])
+      : TableMetadata =
+    meta.copy(properties =
+      props ++ meta.properties.filter { case (k, _) => isMetadataOnly(k) })
+
+  /** Create table `ns.t` in `txn` from `meta` (its schema, and any
+    * snapshot it starts from) with def properties `props`: write the
+    * metadata document under the property mirror, then the def.
+    */
+  private[graft] def createTable(s: StorageOps, txn: Transaction, ns: String,
+      t: String, meta: TableMetadata, props: Map[String, String]): Unit = {
+    val metaPath = FileLocations.tableMetadataPath(ns, t)
+    TableMetadata.write(s, metaPath, mirrored(meta, props))
+    Graft.createTable(s, txn,
+      TableDef(t, ns, metadataLocation = metaPath, properties = props))
+  }
+
+  /** Register the metadata document at `location` (storage-relative,
+    * or absolute under the storage root) as table `ns.t` in `txn`: no
+    * object is copied, the def points at the document. A graft
+    * document's def properties are its properties minus the
+    * metadata-only keys (the mirror rule, read backwards); an Iceberg
+    * `metadata.json` adopts its current snapshot's live files through
+    * [[graft.serve.IcebergStatic.importTable]]. Returns the snapshots
+    * now reachable (1 for an Iceberg import).
+    */
+  private[graft] def registerTable(s: StorageOps, txn: Transaction,
+      ns: String, t: String, location: String): Long = {
+    val rel =
+      if (location.startsWith(s.root)) location.stripPrefix(s.root)
+        .stripPrefix("/")
+      else location
+    require(s.exists(rel), s"no metadata document at $location")
+    if (graft.serve.IcebergStatic.isIcebergMetadata(s.read(rel))) {
+      graft.serve.IcebergStatic.importTable(s, txn, ns, t, rel)
+      return 1L
+    }
+    // read validates the document before anything is committed
+    val meta = TableMetadata.read(s, rel)
+    Graft.createTable(s, txn, TableDef(t, ns, metadataLocation = rel,
+      properties = meta.properties.filter { case (k, _) => !isMetadataOnly(k) }))
+    meta.totalSnapshots
+  }
 
   /** Stage one table edit in `txn`, the way every table commit goes:
     * `apply` runs on the running root now, the same closure (after
@@ -1183,27 +1223,29 @@ object GraftCatalog {
     Map("files" -> files.map(_.path).mkString(",")) ++
       graft.format.StatsRanges.args(files)
 
-  /** Edit the metadata of table `ns.t` in `root`: read its def from
-    * that root, transform the metadata with `f`, write the new
-    * metadata document and a def pointing at it, and put that def
-    * under the table's key. Writes nothing when `f` returns its input.
+  /** Edit table `ns.t` in `root`: read its def from that root, let
+    * `f` map its metadata to the new metadata and def properties,
+    * write the metadata document under the property mirror and a def
+    * pointing at it, and put that def under the table's key. Writes
+    * nothing when `f` returns its metadata and the def's properties.
     */
   private[graft] def editTable(s: StorageOps, root: TreeRoot, ns: String,
-      t: String)(f: (StorageOps, TableDef, TableMetadata) => TableMetadata)
-      : Unit = {
+      t: String)(f: (StorageOps, TableDef, TableMetadata) =>
+        (TableMetadata, Map[String, String])): Unit = {
     val cd = Graft.catalogDef(s, root)
     val key = ObjectKeys.tableKey(ns, t, cd)
     val defPath = TreeOps.searchValue(s, root, key).getOrElse(
       throw new NoSuchTableException(Identifier.of(Array(ns), t)))
     val td = Json.read(s.read(defPath), classOf[TableDef])
     val meta = TableMetadata.read(s, td.metadataLocation)
-    val meta2 = f(s, td, meta)
-    if (meta2 eq meta) return
+    val (meta2, props2) = f(s, td, meta)
+    if ((meta2 eq meta) && props2 == td.properties) return
     val metaPath = FileLocations.tableMetadataPath(ns, t)
-    TableMetadata.write(s, metaPath, meta2)
+    TableMetadata.write(s, metaPath, mirrored(meta2, props2))
     val defPath2 = FileLocations.newTableDefPath(ns, t)
     s.writeAtomic(defPath2, Json.write(td.copy(metadataLocation = metaPath,
-      previousMetadataLocation = Some(td.metadataLocation))))
+      previousMetadataLocation = Some(td.metadataLocation),
+      properties = props2)))
     TreeOps.setValue(s, root, key, Some(defPath2), cd.order)
   }
 
@@ -1220,7 +1262,7 @@ object GraftCatalog {
     editTable(s, root, ns, t) { (s, td, meta) =>
       if (epochKey.exists { case (q, e) =>
           meta.properties.get(streamEpochProp(q)).exists(_.toLong >= e) })
-        meta
+        (meta, td.properties)
       else {
         val inlineMax = td.properties.get(graft.format.Manifests.InlineMaxProp)
           .map(_.toInt).getOrElse(graft.format.Manifests.InlineMaxDefault)
@@ -1229,10 +1271,10 @@ object GraftCatalog {
           .map(_.toInt).getOrElse(graft.format.SnapshotLog.InlineMaxDefault)
         val edited = meta.withSnapshotEdit(s, tableManifestDir(ns, t), op,
           edit, inlineMax, snapsInlineMax, branch)
-        epochKey.fold(edited) { case (q, e) =>
+        (epochKey.fold(edited) { case (q, e) =>
           edited.copy(properties =
             edited.properties + (streamEpochProp(q) -> e.toString))
-        }
+        }, td.properties)
       }
     }
 

@@ -18,16 +18,24 @@ import graft.txn.ActionType
   */
 private[graft] object TableAlterations {
 
-  /** Apply `changes` to (schema, props); returns the evolved pair and
-    * the action type for the transaction log. Throws
-    * IllegalArgumentException on invalid changes (unknown columns,
-    * narrowing types, renaming partition sources...).
+  /** The action type `changes` record in the transaction log: the
+    * last column add or drop decides, any other change is a plain
+    * ALTER.
+    */
+  def actionType(changes: Seq[TableChange]): String =
+    changes.collect {
+      case _: TableChange.AddColumn => ActionType.AlterTableAddColumns
+      case _: TableChange.DeleteColumn => ActionType.AlterTableRemoveColumns
+    }.lastOption.getOrElse(ActionType.AlterTable)
+
+  /** Apply `changes` to (schema, props); returns the evolved pair.
+    * Throws IllegalArgumentException on invalid changes (unknown
+    * columns, narrowing types, renaming partition sources...).
     */
   def apply(schema0: StructType, props0: Map[String, String],
-      changes: Seq[TableChange]): (StructType, Map[String, String], String) = {
+      changes: Seq[TableChange]): (StructType, Map[String, String]) = {
     var schema = schema0
     var props = props0
-    var actionType = ActionType.AlterTable
     changes.foreach {
       case set: TableChange.SetProperty =>
         props = props + (set.property() -> set.value())
@@ -62,7 +70,6 @@ private[graft] object TableAlterations {
           case Some(_) => throw new IllegalArgumentException(
             s"column already exists: ${path.mkString(".")}")
         })
-        actionType = ActionType.AlterTableAddColumns
       case del: TableChange.DeleteColumn =>
         val path = del.fieldNames().toSeq
         val physPath = SchemaEvolution.physicalPath(schema, path).mkString(".")
@@ -75,7 +82,6 @@ private[graft] object TableAlterations {
           .map(_.split(',').toSet).getOrElse(Set.empty[String])
         props = props + (GraftCatalog.DroppedFieldsProp ->
           (dropped + physPath).toSeq.sorted.mkString(","))
-        actionType = ActionType.AlterTableRemoveColumns
       case rn: TableChange.RenameColumn =>
         // metadata-only AT ANY DEPTH: the field keeps its PHYSICAL
         // (on-file) name in field metadata; data files are never
@@ -153,6 +159,6 @@ private[graft] object TableAlterations {
     // physical paths keep their ids, drops retire, adds allocate
     if (schema != schema0)
       props = IcebergFieldIds.persist(schema, IcebergFieldIds.seed(schema0, props))
-    (schema, props, actionType)
+    (schema, props)
   }
 }

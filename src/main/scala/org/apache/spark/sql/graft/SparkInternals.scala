@@ -86,6 +86,11 @@ object SparkInternals {
     val factory = new ParquetFileFormat().prepareWrite(
       spark, job, Map.empty, StructType(dataAttrs.map(a =>
         org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable))))
+    // timestamps as INT64 micros whatever the session's default (INT96):
+    // only then does the footer carry the min/max that file pruning
+    // and file-selective DELETE read (INT96 has no defined order)
+    job.getConfiguration.set("spark.sql.parquet.outputTimestampType",
+      "TIMESTAMP_MICROS")
 
     val committer = FileCommitProtocol.instantiate(
       spark.sessionState.conf.fileCommitProtocolClass,

@@ -79,31 +79,84 @@ class MigrationSpec extends AnyFunSuite {
   }
 
   test("register_table adopts a metadata document, partition spec intact") {
-    spark.sql("""CREATE TABLE mig.ns.part (k BIGINT, region STRING)
-                 PARTITIONED BY (region)""")
-    spark.sql("""INSERT INTO mig.ns.part VALUES
-                 (1, 'EU'), (2, 'EU'), (3, 'US')""")
-    val loc = {
-      val txn = graft.catalog.Graft.beginTransaction(cat.storage)
-      graft.catalog.Graft.describeTable(cat.storage, txn, "ns", "part")
-        .metadataLocation
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS mig.ns")
+    def partitioned(t: String, tail: String = ""): Unit = {
+      spark.sql(s"""CREATE TABLE mig.ns.$t (k BIGINT, region STRING)
+                    PARTITIONED BY (region) $tail""")
+      seed(t)
     }
-    // the def is dropped; objects (metadata doc, data files) survive
-    spark.sql("DROP TABLE mig.ns.part")
-    assert(!spark.catalog.tableExists("mig.ns.part"))
-    val snaps = spark.sql(
-      s"CALL mig.system.register_table('ns', 'restored', '$loc')")
-      .collect().head.getLong(0)
-    assert(snaps == 1)
-    val rows = spark.sql(
-      "SELECT k FROM mig.ns.restored WHERE region = 'EU' ORDER BY k")
-      .collect().map(_.getLong(0))
-    assert(rows.toSeq == Seq(1L, 2L))
-    // partition pruning still works: the spec came from the doc's
-    // property mirror, and partitioned INSERTs land correctly
-    spark.sql("INSERT INTO mig.ns.restored VALUES (4, 'US')")
-    assert(spark.sql("SELECT count(*) FROM mig.ns.restored WHERE region = 'US'")
-      .collect()(0).getLong(0) == 2)
+    def seed(t: String): Unit = spark.sql(
+      s"INSERT INTO mig.ns.$t VALUES (1, 'EU'), (2, 'EU'), (3, 'US')")
+    // every door that writes a table's def and metadata document; each
+    // builds partitioned table ns.<t> holding the seed rows
+    val doors = Seq[(String, String => Unit)](
+      "SQL CREATE" -> (partitioned(_, "TBLPROPERTIES ('door' = 'create')")),
+      "ALTER SET TBLPROPERTIES" -> { t =>
+        partitioned(t)
+        spark.sql(s"ALTER TABLE mig.ns.$t SET TBLPROPERTIES ('door' = 'alter')")
+      },
+      "partition-field add" -> { t =>
+        spark.sql(s"CREATE TABLE mig.ns.$t (k BIGINT, region STRING)")
+        spark.sql(s"ALTER TABLE mig.ns.$t ADD PARTITION FIELD region")
+        seed(t)
+      },
+      "REST set-properties" -> { t =>
+        partitioned(t)
+        graft.serve.IcebergCommits.commit(cat.storage, "ns", t,
+          graft.objects.Json.mapper.readTree("""{"requirements":[],
+            "updates":[{"action":"set-properties","updates":{"door":"rest"}}]}"""))
+      },
+      "native HTTP create" -> { t =>
+        val server = new graft.serve.CatalogHttpServer(cat.storage)
+        val port = server.start()
+        try {
+          val req = graft.serve.CreateTableRequest(t,
+            org.apache.spark.sql.types.StructType
+              .fromDDL("k BIGINT, region STRING").json,
+            Map(GraftCatalog.PartitionColsProp -> "region", "door" -> "http"))
+          val res = java.net.http.HttpClient.newHttpClient().send(
+            java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+              s"http://127.0.0.1:$port/v1/namespaces/ns/tables"))
+              .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+                graft.objects.Json.writeString(req))).build(),
+            java.net.http.HttpResponse.BodyHandlers.ofString())
+          assert(res.statusCode() == 201, res.body())
+        } finally server.stop()
+        seed(t)
+      },
+      "partitioned Iceberg import" -> { t =>
+        partitioned(s"${t}_src")
+        val loc = graft.serve.IcebergStatic.export(cat.storage, "ns", s"${t}_src")
+        spark.sql(s"CALL mig.system.register_table('ns', '$t', '$loc')")
+      })
+    def rows(t: String): Seq[(Long, String)] =
+      spark.sql(s"SELECT k, region FROM mig.ns.$t").collect()
+        .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    def defOf(t: String): graft.objects.TableDef = {
+      val txn = graft.catalog.Graft.beginTransaction(cat.storage)
+      graft.catalog.Graft.describeTable(cat.storage, txn, "ns", t)
+    }
+    for (((door, build), i) <- doors.zipWithIndex) {
+      val t = s"door$i"
+      build(t)
+      val before = defOf(t)
+      assert(before.properties.get(GraftCatalog.PartitionColsProp)
+        .contains("region"), s"$door: ${before.properties}")
+      assert(rows(t) == Seq((1L, "EU"), (2L, "EU"), (3L, "US")), door)
+      // the def is dropped; objects (metadata doc, data files) survive
+      spark.sql(s"DROP TABLE mig.ns.$t")
+      val back = s"${t}_back"
+      val snaps = spark.sql(s"CALL mig.system.register_table('ns', '$back', " +
+        s"'${before.metadataLocation}')").collect().head.getLong(0)
+      assert(snaps == 1, door) // the seed INSERT; edits add no snapshot
+      assert(defOf(back).properties == before.properties, door)
+      assert(rows(back) == Seq((1L, "EU"), (2L, "EU"), (3L, "US")), door)
+      // the spec came from the doc's property mirror: partitioned
+      // INSERTs land correctly and prune
+      spark.sql(s"INSERT INTO mig.ns.$back VALUES (4, 'US')")
+      assert(spark.sql(s"SELECT count(*) FROM mig.ns.$back WHERE region = 'US'")
+        .collect()(0).getLong(0) == 2, door)
+    }
   }
 
   test("partition-aligned DELETE is a metadata-only drop, no rewrite") {

@@ -3,9 +3,15 @@ package graft.maintain
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.spark.GraftCatalog
+import graft.spark.{GraftCatalog, MorPartition}
 
 /** Group-scoped min/max retraction must PRUNE the recompute scan: a
   * sparse delete's touched-group keys become per-column IN predicates
@@ -17,8 +23,8 @@ class MvGroupsPruneSpec extends AnyFunSuite {
 
   private lazy val warehouse = Files.createTempDirectory("graft-mgp").toString
 
-  // the tests mutate MV runtime conf (compact-after-deletes,
-  // debug-scan-files) — an ISOLATED session (own SQLConf, shared
+  // the tests mutate MV runtime conf (compact-after-deletes) — an
+  // ISOLATED session (own SQLConf, shared
   // SparkContext) keeps those knobs from bleeding into suites running
   // concurrently against the getOrCreate-shared session
   lazy val spark: SparkSession = {
@@ -52,13 +58,10 @@ class MvGroupsPruneSpec extends AnyFunSuite {
     // refresh must take the group-scoped path, and its recompute scan
     // must read only the files whose gk range can contain group 3
     spark.sql("DELETE FROM mgp.ns1.src WHERE gk = 3 AND pv < 3100")
-    spark.conf.set("spark.graft.mv.groups.debug-scan-files", "true")
-    val mode = try spark.sql(
+    val (mode, scanned) = scannedOf("ns1", "src",
       """CALL mgp.system.refresh_materialized_view(
-           namespace => 'ns1', name => 'mv')""").head.getString(0)
-    finally spark.conf.unset("spark.graft.mv.groups.debug-scan-files")
+           namespace => 'ns1', name => 'mv')""")
     assert(mode == "groups", s"expected groups, got $mode")
-    val scanned = MaterializedViews.lastGroupsScanFiles.get()
     assert(scanned >= 1 && scanned < totalFiles / 2,
       s"group-scoped recompute read $scanned of $totalFiles files — " +
         "the touched-key IN prune did not reach the scan")
@@ -111,13 +114,10 @@ class MvGroupsPruneSpec extends AnyFunSuite {
     spark.sql("""DELETE FROM mgp.ns3.ev
                  WHERE ts >= timestamp'2024-03-04 00:00:00'
                    AND ts < timestamp'2024-03-04 00:04:00'""")
-    spark.conf.set("spark.graft.mv.groups.debug-scan-files", "true")
-    val mode = try spark.sql(
+    val (mode, scanned) = scannedOf("ns3", "ev",
       """CALL mgp.system.refresh_materialized_view(
-           namespace => 'ns3', name => 'mv')""").head.getString(0)
-    finally spark.conf.unset("spark.graft.mv.groups.debug-scan-files")
+           namespace => 'ns3', name => 'mv')""")
     assert(mode == "groups", s"expected groups, got $mode")
-    val scanned = MaterializedViews.lastGroupsScanFiles.get()
     assert(scanned >= 1 && scanned < totalFiles / 2,
       s"day-bucket recompute read $scanned of $totalFiles files — " +
         "the ts range prune did not reach the scan")
@@ -183,11 +183,51 @@ class MvGroupsPruneSpec extends AnyFunSuite {
     assert(state == truth)
   }
 
-  private def scannedOf(refreshSql: String): (String, Long) = {
-    spark.conf.set("spark.graft.mv.groups.debug-scan-files", "true")
-    val mode = try spark.sql(refreshSql).head.getString(0)
-    finally spark.conf.unset("spark.graft.mv.groups.debug-scan-files")
-    (mode, MaterializedViews.lastGroupsScanFiles.get())
+  /** Run the refresh `refreshSql` and count the distinct data files of
+    * source table `ns.t` that its own scans planned: a query
+    * execution listener collects the input partitions of every graft
+    * scan in the refresh's executed plans (subqueries and adaptive
+    * stages included). Listener events arrive asynchronously, in
+    * order; a marker query run after the refresh flushes them.
+    */
+  private def scannedOf(ns: String, t: String,
+      refreshSql: String): (String, Long) = {
+    val dir = s"/data/$ns/$t/files/"
+    val files = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var flushed = false
+    val marker = s"refresh-scan-marker-${java.util.UUID.randomUUID()}"
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    def paths(ip: InputPartition): Seq[String] = ip match {
+      case fp: FilePartition => fp.files.toSeq.map(_.filePath.toString)
+      case mp: MorPartition => paths(mp.inner)
+      case _ => Seq.empty
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) flushed = true
+        else nodes(qe.executedPlan).foreach {
+          case b: BatchScanExec => b.inputPartitions.flatMap(paths)
+            .filter(_.contains(dir)).foreach(files.add)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val mode = spark.sql(refreshSql).head.getString(0)
+      spark.sql(s"SELECT '$marker'").collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!flushed && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(flushed, "query listener never saw the marker query")
+      (mode, files.size.toLong)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("a date_trunc key over a DATE column range-prunes with DATE " +
@@ -212,7 +252,7 @@ class MvGroupsPruneSpec extends AnyFunSuite {
                    aggs => 'n:count:1;mn:min:v;mx:max:v',
                    key_exprs => 'mon:date_trunc(''MONTH'', d)')""")
     spark.sql("DELETE FROM mgp.ns4.ev WHERE d = date'2024-05-03'")
-    val (mode, scanned) = scannedOf(
+    val (mode, scanned) = scannedOf("ns4", "ev",
       """CALL mgp.system.refresh_materialized_view(
            namespace => 'ns4', name => 'mv')""")
     assert(mode == "groups", mode)
@@ -262,13 +302,13 @@ class MvGroupsPruneSpec extends AnyFunSuite {
     spark.sql("""DELETE FROM mgp.ns5.ev
                  WHERE ts >= timestamp'2014-06-01 00:00:00'
                    AND ts < timestamp'2014-06-01 02:00:00'""")
-    val (modeD, scannedD) = scannedOf(
+    val (modeD, scannedD) = scannedOf("ns5", "ev",
       """CALL mgp.system.refresh_materialized_view(
            namespace => 'ns5', name => 'mvd')""")
     assert(modeD == "groups", modeD)
     assert(scannedD >= 1 && scannedD < totalFiles / 2,
       s"to_date recompute read $scannedD of $totalFiles files")
-    val (modeY, scannedY) = scannedOf(
+    val (modeY, scannedY) = scannedOf("ns5", "ev",
       """CALL mgp.system.refresh_materialized_view(
            namespace => 'ns5', name => 'mvy')""")
     assert(modeY == "groups", modeY)

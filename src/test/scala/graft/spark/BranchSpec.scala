@@ -37,6 +37,14 @@ class BranchSpec extends AnyFunSuite {
       .head.getLong(0) == 4, "a branch name time-travels like a tag")
   }
 
+  test("ALTER on a branch identifier is refused: it changes the whole table") {
+    val e = intercept[Exception](spark.sql(
+      "ALTER TABLE br.ns.`t$branch_audit` SET TBLPROPERTIES ('x' = '1')"))
+    assert(e.getMessage.contains("ALTER changes the whole table"), e.getMessage)
+    assert(!spark.sql("SHOW TBLPROPERTIES br.ns.t").collect()
+      .exists(_.getString(0) == "x"), "the refused ALTER reached main")
+  }
+
   test("$refs lists branches alongside tags") {
     spark.sql("CALL br.system.create_tag('ns', 't', 'v1')")
     val refs = spark.sql(

@@ -73,6 +73,29 @@ class DtxnProtocolSpec extends AnyFunSuite {
     for ((t, _, _, want) <- kinds) assert(rows(s"dcat.ns1.$t") == want, t)
   }
 
+  test("dtxn ALTER stays invisible until publish") {
+    spark.sql("CREATE TABLE dcat.ns1.alt (k BIGINT)")
+    spark.sql("INSERT INTO dcat.ns1.alt VALUES (1)")
+    spark.sql("CREATE NAMESPACE dcat.sys.dtxns.dtxn_alt")
+    val inTxn = "dcat.sys.dtxns.dtxn_alt.ns1.alt"
+    spark.sql(s"ALTER TABLE $inTxn SET TBLPROPERTIES ('audit' = 'pending')")
+    spark.sql(s"ALTER TABLE $inTxn ADD COLUMN v STRING")
+    spark.sql(s"INSERT INTO $inTxn VALUES (2, 'x')")
+    def audit(t: String): Option[String] =
+      spark.sql(s"SHOW TBLPROPERTIES $t").collect()
+        .find(_.getString(0) == "audit").map(_.getString(1))
+    def rows(t: String): Seq[String] =
+      spark.table(t).collect().map(_.toString).sorted.toSeq
+    assert(audit(inTxn).contains("pending"))
+    assert(rows(inTxn) == Seq("[1,null]", "[2,x]"))
+    assert(audit("dcat.ns1.alt").isEmpty, "the ALTER leaked before publish")
+    assert(rows("dcat.ns1.alt") == Seq("[1]"), "the ALTER leaked before publish")
+    spark.sql(
+      "ALTER NAMESPACE dcat.sys.dtxns.dtxn_alt SET PROPERTIES ('commit'='true')")
+    assert(audit("dcat.ns1.alt").contains("pending"))
+    assert(rows("dcat.ns1.alt") == Seq("[1,null]", "[2,x]"))
+  }
+
   test("catalog-wide object listing: sys.objects") {
     val objs = spark.table("dcat.sys.objects").collect()
     assert(objs.exists(r => r.getString(0) == "namespace" && r.getString(1) == "ns1"))

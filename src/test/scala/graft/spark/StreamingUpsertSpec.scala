@@ -139,6 +139,42 @@ class StreamingUpsertSpec extends AnyFunSuite {
     assert(ops.toSeq == Seq("append", "append"))
   }
 
+  // the exactly-once watermark of a replayed epoch must survive every
+  // def edit between the first commit and the replay
+  for ((edit, alter) <- Seq[(String, String => Unit)](
+      "ALTER TABLE SET TBLPROPERTIES" -> (t => spark.sql(
+        s"ALTER TABLE $t SET TBLPROPERTIES ('team' = 'ops')")),
+      "CREATE MATERIALIZED VIEW on the table" -> (t => spark.sql(
+        s"""CREATE MATERIALIZED VIEW ${t}_mv AS
+            SELECT k, count(*) AS n FROM $t GROUP BY k""")))) {
+    test(s"a replayed epoch commits once across $edit") {
+      import spark.implicits._
+      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val t = "gsu.ns.replay_" + edit.takeWhile(_ != ' ').toLowerCase
+      spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING)")
+      val ck = Files.createTempDirectory("graft-ups-replay")
+      val in = MemoryStream[(Long, String)]
+      def run(): Unit = {
+        val q = in.toDF().toDF("k", "v").writeStream
+          .option("checkpointLocation", ck.toString).toTable(t)
+        try q.processAllAvailable() finally q.stop()
+      }
+      in.addData((1L, "a"), (2L, "b"))
+      run()
+      assert(spark.table(t).count() == 2)
+      alter(t)
+      // the commit of epoch 0 was "lost" after the table committed it:
+      // the restarted query replays the epoch with the same query id
+      val commits = ck.resolve("commits")
+      Files.delete(commits.resolve("0"))
+      Files.deleteIfExists(commits.resolve(".0.crc"))
+      run()
+      assert(Files.exists(commits.resolve("0")), "epoch 0 was not replayed")
+      assert(spark.table(t).count() == 2, s"replayed epoch after $edit " +
+        "committed a second time")
+    }
+  }
+
   test("oversized key sets skip the broadcast hint, results identical") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
