@@ -82,7 +82,6 @@ object Maintenance {
       eqDeletes = pendingEqDeletes.map(p => (storage.absolute(p.path), p)),
       posDeleteBytes = pendingPosDeletes.map(_.sizeBytes).sum)
     val spec = graft.spark.GraftCatalog.specOf(td.properties)
-    val identCols = spec.filter(_.isIdentity).map(_.col)
     // `sort_by => 'zorder(a,b,…)'` range-clusters on the interleaved
     // z-order key: output files get tight [min,max] in EVERY listed
     // column, so later filters on ANY of them prune files — the
@@ -93,11 +92,13 @@ object Maintenance {
       case _ => Seq.empty
     }
     // one file per partition value IS the compaction for partitioned
-    // tables; non-partitioned tables coalesce to targetFiles
-    // (commitDataFiles re-derives hidden transform dirs itself)
+    // tables (the write clusters on the partition transforms, then
+    // sorts on them and the sort key); non-partitioned tables coalesce
+    // to targetFiles
     import org.apache.spark.sql.functions.col
     val compacted =
-      if (zorderCols.nonEmpty && spec.isEmpty) {
+      if (spec.nonEmpty) df
+      else if (zorderCols.nonEmpty) {
         val zkey = org.apache.spark.sql.graft.SparkInternals.column(
           graft.functions.ZOrderKey(zorderCols.map(c =>
             org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq(c)))))
@@ -106,19 +107,12 @@ object Maintenance {
           .sortWithinPartitions("__zkey")
           .drop("__zkey")
       }
-      else if (spec.isEmpty && sortCols.isEmpty) df.repartition(targetFiles)
-      else if (spec.isEmpty)
-        df.repartitionByRange(targetFiles, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else if (sortCols.isEmpty || identCols.isEmpty) df
-      else df.repartition(identCols.map(col): _*)
-        .sortWithinPartitions((identCols ++ sortCols).map(col): _*)
-    val newFiles = graft.spark.GraftCatalog.commitDataFiles(
-      compacted, spec, storage, ns, t,
-      writeOpts = graft.spark.GraftWriteSupport
-        .parquetOptions(td.properties, schema),
-      bloom = graft.format.FileBloom.specOf(td.properties,
-        graft.spark.ColumnMapping.renames(schema)))
+      else if (sortCols.isEmpty) df.repartition(targetFiles)
+      else df.repartitionByRange(targetFiles, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*)
+    val newFiles = graft.spark.DataFileWrite.writeFrame(compacted, storage,
+      ns, t, schema, td.properties,
+      sortCols = if (zorderCols.nonEmpty) Seq.empty else sortCols)
     commitSnapshot(cat, txn, ns, t, "compact",
       graft.format.OverwriteFiles(newFiles), branch)
     CompactionResult(before, newFiles.size)
@@ -200,12 +194,8 @@ object Maintenance {
           Seq.empty, Seq.empty,
           eqDeletes = eq.map(p => (storage.absolute(p.path), p)),
           posDeleteBytes = 0L)
-        graft.spark.GraftCatalog.commitDataFiles(
-          df, spec, storage, ns, t,
-          writeOpts = graft.spark.GraftWriteSupport
-            .parquetOptions(td.properties, schema),
-          bloom = graft.format.FileBloom.specOf(td.properties,
-            graft.spark.ColumnMapping.renames(schema)))
+        graft.spark.DataFileWrite.writeFrame(df, storage, ns, t, schema,
+          td.properties)
       }
     // the overwrite commit clears the pending delete list — sound
     // because every delete-key row could only live in a touched bucket

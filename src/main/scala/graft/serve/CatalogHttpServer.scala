@@ -308,12 +308,7 @@ class CatalogHttpServer(storage: StorageOps, port: Int = 0,
       require(nsArr != null && nsArr.size() == 1,
         "graft namespaces are single-level")
       val name = nsArr.get(0).asText()
-      val props = Option(body.get("properties")).map { p =>
-        val it = p.properties().iterator()
-        val m = scala.collection.mutable.Map.empty[String, String]
-        while (it.hasNext) { val e = it.next(); m(e.getKey) = e.getValue.asText() }
-        m.toMap
-      }.getOrElse(Map.empty[String, String])
+      val props = propertiesOf(body)
       inWriteTxn(txn => Graft.createNamespace(storage, txn,
         NamespaceDef(name, props)))
       reply(ex, 200, IcebergRest.namespaceResponse(name, props))
@@ -347,8 +342,19 @@ class CatalogHttpServer(storage: StorageOps, port: Int = 0,
         "table create needs name and schema")
       val name = body.get("name").asText()
       val schema = IcebergRest.fromIcebergSchema(body.get("schema"))
+      // an identity spec becomes graft's partition columns; any other
+      // transform is refused with a 400 that says why
+      val partCols = Option(body.get("partition-spec"))
+        .map(_.path("fields")).filter(_.isArray)
+        .fold(Seq.empty[String])(
+          IcebergStatic.identityPartitionCols(_, body.get("schema")))
+      partCols.foreach(c => require(schema.fieldNames.contains(c),
+        s"partition source column $c is not in the table schema"))
       inWriteTxn(GraftCatalog.createTable(storage, _, ns, name,
-        TableMetadata.empty(schema.json), Map.empty))
+        TableMetadata.empty(schema.json),
+        propertiesOf(body) ++
+          (if (partCols.isEmpty) Map.empty
+           else Map(GraftCatalog.PartitionColsProp -> partCols.mkString(",")))))
       replyLoadTable(ex, ns, name)
     case ("GET", List("namespaces", ns, "tables", t)) =>
       replyLoadTable(ex, ns, t)
@@ -639,6 +645,15 @@ class CatalogHttpServer(storage: StorageOps, port: Int = 0,
         case None => reply(ex, 404, """{"error":"no such route"}""")
       }
     }
+  }
+
+  /** A request body's `properties` object as a string map. */
+  private def propertiesOf(body: com.fasterxml.jackson.databind.JsonNode)
+      : Map[String, String] = {
+    val m = Map.newBuilder[String, String]
+    body.path("properties").properties().forEach(e =>
+      m += e.getKey -> e.getValue.asText())
+    m.result()
   }
 
   private def requestBody(ex: HttpExchange): Array[Byte] =

@@ -188,12 +188,9 @@ object IcebergStatic {
     IcebergRest.fromIcebergSchema(schemaNode)
   }
 
-  /** The default spec's IDENTITY partition source-column names, in
-    * spec order — resolved through the schema's field ids. Any
-    * non-identity transform (bucket, truncate, days, …) is refused:
-    * graft recovers partition values from Hive-style path segments,
-    * and a transform's derived values are not recoverable from an
-    * external writer's paths.
+  /** The default spec's IDENTITY partition source-column names of a
+    * metadata document, in spec order ([[identityPartitionCols]] over
+    * its default spec and current schema).
     */
   private def identityPartitionCols(node: JsonNode): Seq[String] = {
     val fields: Option[JsonNode] =
@@ -207,22 +204,34 @@ object IcebergStatic {
         }
         Option(hit).map(_.path("fields"))
       }.orElse(Option(node.get("partition-spec")))
-    val arr = fields.filter(_.isArray).getOrElse(return Seq.empty)
-    val idToName: Map[Int, String] = {
-      val schemaNode = Option(node.get("schemas"))
-        .map { ss =>
-          val want = node.path("current-schema-id").asInt(0)
-          val it = ss.elements()
-          var hit: JsonNode = null
-          var first: JsonNode = null
-          while (it.hasNext) {
-            val s = it.next()
-            if (first == null) first = s
-            if (s.path("schema-id").asInt(-1) == want) hit = s
-          }
-          if (hit != null) hit else first
+    val schemaNode = Option(node.get("schemas"))
+      .map { ss =>
+        val want = node.path("current-schema-id").asInt(0)
+        val it = ss.elements()
+        var hit: JsonNode = null
+        var first: JsonNode = null
+        while (it.hasNext) {
+          val s = it.next()
+          if (first == null) first = s
+          if (s.path("schema-id").asInt(-1) == want) hit = s
         }
-        .getOrElse(node.get("schema"))
+        if (hit != null) hit else first
+      }
+      .getOrElse(node.get("schema"))
+    fields.filter(_.isArray)
+      .fold(Seq.empty[String])(identityPartitionCols(_, schemaNode))
+  }
+
+  /** The IDENTITY partition source-column names of a spec's `fields`
+    * array, in spec order — resolved through `schemaNode`'s field
+    * ids. Any non-identity transform (bucket, truncate, days, …) is
+    * refused: graft recovers partition values from Hive-style path
+    * segments, and a transform's derived values are not recoverable
+    * from an external writer's paths.
+    */
+  private[serve] def identityPartitionCols(fields: JsonNode,
+      schemaNode: JsonNode): Seq[String] = {
+    val idToName: Map[Int, String] = {
       val out = Map.newBuilder[Int, String]
       val it = schemaNode.path("fields").elements()
       while (it.hasNext) {
@@ -231,14 +240,13 @@ object IcebergStatic {
       }
       out.result()
     }
-    (0 until arr.size()).map { i =>
-      val f = arr.get(i)
+    (0 until fields.size()).map { i =>
+      val f = fields.get(i)
       val transform = f.path("transform").asText()
       require(transform == "identity",
-        s"partition transform '$transform' cannot be imported: graft " +
+        s"partition transform '$transform' is not supported: graft " +
           "derives partition values from Hive-style paths, which only " +
-          "identity transforms guarantee — compact or re-spec the " +
-          "source table first")
+          "identity transforms guarantee")
       val srcId = f.path("source-id").asInt(-1)
       idToName.getOrElse(srcId,
         // v1 documents may omit ids; fall back to the field name,

@@ -1,15 +1,10 @@
 package graft.spark
 
-import java.util.UUID
-
 import graft.objects.FileLocations
 import graft.storage.StorageOps
-import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder => VSortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriterCommitMessage}
-import org.apache.spark.sql.graft.SparkInternals
-import org.apache.spark.sql.types.StructType
 
 /** Native DSv2 append/overwrite (reference analog:
   * OlympiaIcebergMergeAppend.java:36-68 — but as a first-class
@@ -71,58 +66,6 @@ class GraftAppendWrite(
     s"GraftAppendWrite(${table.name()}, ${if (overwrite) "overwrite" else "append"})"
 }
 
-/** Shared write-path plumbing for hidden partition transforms. */
-private[graft] object GraftWriteSupport {
-  /** Extend a parquet writer factory so each row derives its hidden
-    * transform directory columns (`gp_*`) on the executor; identity-
-    * only specs pass the factory through untouched.
-    */
-  def deriving(delegate: DataWriterFactory, physSchema: StructType,
-      spec: Seq[PartitionField]): DataWriterFactory = {
-    val derived = spec.filterNot(_.isIdentity)
-    if (derived.isEmpty) return delegate
-    SparkInternals.derivingWriterFactory(delegate, physSchema, attrs =>
-      derived.map { f =>
-        val a = attrs.find(_.name == f.col).getOrElse(
-          throw new IllegalArgumentException(
-            s"partition source ${f.col} missing from write schema"))
-        f.expr(a, a.dataType)
-      })
-  }
-
-  /** Per-table parquet writer tuning: table properties prefixed
-    * `graft.parquet.` become hadoop conf keys under `parquet.` for
-    * this table's data-file writes (e.g.
-    * `'graft.parquet.bloom.filter.enabled#ck' = 'true'` turns on a
-    * parquet bloom filter for column `ck` — the row-group skipping
-    * structure point lookups at 100 TB live on). A `#column` suffix
-    * is translated to the column's PHYSICAL name, matching what data
-    * files actually store (rename-safe, like the writes themselves).
-    */
-  def parquetOptions(table: GraftTable): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    parquetOptions(table.properties().asScala.toMap, table.schema)
-  }
-
-  /** Core of [[parquetOptions]] for callers holding raw table
-    * properties + a schema (maintenance rewrites, COW partial
-    * rewrites) rather than a loaded [[GraftTable]].
-    */
-  def parquetOptions(props: Map[String, String],
-      schema: StructType): Map[String, String] = {
-    val renames = ColumnMapping.renames(schema)
-    props.collect {
-      case (k, v) if k.startsWith("graft.parquet.") =>
-        val raw = k.stripPrefix("graft.")
-        val mapped = raw.split('#') match {
-          case Array(base, c) => base + "#" + renames.getOrElse(c, c)
-          case _ => raw
-        }
-        mapped -> v
-    }
-  }
-}
-
 /** Native micro-batch streaming sink. Two modes:
   *
   *  - **append** (default): each epoch's rows stage through the same
@@ -152,8 +95,7 @@ class GraftStreamingWrite(
 
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
-  private val spec = table.partitionSpec
-  private val partCols = PartitionTransforms.dirNames(spec)
+  private val partitioned = table.partitionSpec.nonEmpty
   private val dataDir =
     FileLocations.tableDataDir(table.namespaceName, table.tableName)
   private val storage: StorageOps = table.storageOps
@@ -180,32 +122,17 @@ class GraftStreamingWrite(
     upsertKeys.map(k => renames.getOrElse(k, k))
   }
 
-  private case class EpochState(commitId: String, stagingRel: String,
-      delegate: BatchWrite)
-  @volatile private var current: EpochState = _
+  /** This trigger's data files, from its writer factory to `commit`. */
+  @volatile private var current: DataFileWrite = _
 
-  /** The parquet delegate runs Spark's file commit protocol, which
-    * coordinates task commits itself — double-asking the
-    * OutputCommitCoordinator denies the task's own commit.
-    */
-  override def useCommitCoordinator(): Boolean = false
+  override def useCommitCoordinator(): Boolean =
+    DataFileWrite.UseCommitCoordinator
 
   override def createStreamingWriterFactory(pi: PhysicalWriteInfo)
       : StreamingDataWriterFactory = {
-    val commitId = UUID.randomUUID().toString
-    val stagingRel =
-      if (partCols.isEmpty) s"$dataDir/$commitId"
-      else s"$dataDir/.staging-$commitId"
-    val physSchema =
-      ColumnMapping.toPhysicalRequired(info.schema(), table.schema)
-    val delegate = SparkInternals.parquetBatchWrite(
-      org.apache.spark.sql.SparkSession.active.asInstanceOf[ClassicSession],
-      PartitionTransforms.extendSchema(physSchema, spec), partCols,
-      storage.absolute(stagingRel), info.queryId(),
-      GraftWriteSupport.parquetOptions(table))
-    current = EpochState(commitId, stagingRel, delegate)
-    val batchFactory = GraftWriteSupport.deriving(
-      delegate.createBatchWriterFactory(pi), physSchema, spec)
+    val files = DataFileWrite(table, info.schema(), info.queryId())
+    current = files
+    val batchFactory = files.factory(pi)
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
           : org.apache.spark.sql.connector.write.DataWriter[
@@ -216,16 +143,13 @@ class GraftStreamingWrite(
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val st = current
-    require(st != null, "streaming commit without a writer factory")
+    val files = current
+    require(files != null, "streaming commit without a writer factory")
     current = null
-    st.delegate.commit(messages)
-    val newFiles = GraftCatalog.finalizeCommitDir(
-      storage, table.namespaceName, table.tableName, st.commitId, partCols,
-      table.fileBloomSpec)
+    val newFiles = files.commit(messages)
     val eqDeletes =
       if (upsertKeys.isEmpty || newFiles.isEmpty) Seq.empty
-      else Seq(writeEqDeleteObject(st.commitId, newFiles))
+      else Seq(writeEqDeleteObject(files.commitId, newFiles))
     catalog.commitStreamEpoch(table.ident, newFiles, eqDeletes, overwrite,
       epochKey = (info.queryId(), epochId))
     // opt-in, best-effort, AFTER the epoch commit: a streamed-into
@@ -248,7 +172,7 @@ class GraftStreamingWrite(
     val spark = org.apache.spark.sql.SparkSession.active
     val abs = newFiles.map(f => storage.absolute(f.path))
     val r0 = spark.read
-    val r = if (partCols.isEmpty) r0
+    val r = if (!partitioned) r0
       else r0.option("basePath", storage.absolute(dataDir))
     val keys = r.parquet(abs: _*).select(physKeys.map(col): _*).distinct()
     val stageRel = s"$dataDir/.eqstage-$commitId"
@@ -266,12 +190,9 @@ class GraftStreamingWrite(
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val st = current
+    val files = current
     current = null
-    if (st != null) {
-      try st.delegate.abort(messages)
-      finally storage.deleteTree(st.stagingRel)
-    }
+    if (files != null) files.abort(messages)
   }
 }
 
@@ -286,48 +207,21 @@ class GraftAppendBatchWrite(
     info: LogicalWriteInfo,
     overwrite: Boolean) extends BatchWrite {
 
-  private val storage: StorageOps = table.storageOps
-  private val spec = table.partitionSpec
-  private val partCols = PartitionTransforms.dirNames(spec)
-  private val commitId = UUID.randomUUID().toString
-  private val dataDir =
-    FileLocations.tableDataDir(table.namespaceName, table.tableName)
-  private val stagingRel =
-    if (partCols.isEmpty) s"$dataDir/$commitId"
-    else s"$dataDir/.staging-$commitId"
-
-  // data files always carry PHYSICAL column names (rename-safe
-  // writes, ColumnMapping) — rows are positional, so re-labeling the
-  // write schema is the whole job
-  private val physSchema =
-    ColumnMapping.toPhysicalRequired(info.schema(), table.schema)
-
-  private lazy val delegate: BatchWrite =
-    SparkInternals.parquetBatchWrite(
-      org.apache.spark.sql.SparkSession.active.asInstanceOf[ClassicSession],
-      PartitionTransforms.extendSchema(physSchema, spec), partCols,
-      storage.absolute(stagingRel), info.queryId(),
-      GraftWriteSupport.parquetOptions(table))
+  private val files = DataFileWrite(table, info.schema(), info.queryId())
 
   override def createBatchWriterFactory(pi: PhysicalWriteInfo): DataWriterFactory =
-    GraftWriteSupport.deriving(delegate.createBatchWriterFactory(pi),
-      physSchema, spec)
+    files.factory(pi)
 
-  override def useCommitCoordinator(): Boolean = delegate.useCommitCoordinator()
+  override def useCommitCoordinator(): Boolean =
+    DataFileWrite.UseCommitCoordinator
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    delegate.commit(messages) // finalizes parquet under the staging dir
-    val newFiles = GraftCatalog.finalizeCommitDir(
-      storage, table.namespaceName, table.tableName, commitId, partCols,
-      table.fileBloomSpec)
-    catalog.commitFiles(table.ident, newFiles, overwrite)
+    catalog.commitFiles(table.ident, files.commit(messages), overwrite)
     // opt-in, best-effort, AFTER the commit: never fails the write
     graft.maintain.MaterializedViews.maybeRefreshOnCommit(
       catalog, table.properties())
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    try delegate.abort(messages)
-    finally storage.deleteTree(stagingRel)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    files.abort(messages)
 }

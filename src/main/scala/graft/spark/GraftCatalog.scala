@@ -802,7 +802,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
       val td = Graft.describeTable(storage, txn, ns, t)
       (ns, t, branch, TableMetadata.read(storage, td.metadataLocation), td)
     }
-    val spec = GraftCatalog.specOf(td.properties)
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     // files + their stats speak PHYSICAL names; the rewrite fn speaks
     // logical — read physical, re-label, rewrite, write physical
@@ -861,9 +860,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
           case (df, (logical, physical)) =>
             df.withColumnRenamed(physical, logical)
         }
-        GraftCatalog.commitDataFiles(rewrite(logicalDf), spec, storage, ns, t,
-          Some(schema), GraftWriteSupport.parquetOptions(td.properties, schema),
-          graft.format.FileBloom.specOf(td.properties, renames))
+        DataFileWrite.writeFrame(rewrite(logicalDf), storage, ns, t, schema,
+          td.properties)
       }
     // a complete-predicate DELETE records its predicate (physical
     // names, like merge-on-read's DeletePredicate) on the snapshot:
@@ -1327,88 +1325,4 @@ object GraftCatalog {
     */
   def tableManifestDir(ns: String, t: String): String =
     s"data/$ns/$t/manifests"
-
-  /** Commit a DataFrame as data files and return their entries.
-    *
-    * Non-partitioned tables: one flat commit directory per commit
-    * (files/<uuid>/part-*.parquet), as before.
-    *
-    * Partitioned tables: Hive-style layout SHARED across commits —
-    * files/<col>=<value>/<commitId>-part-*.parquet — so external
-    * readers partition-prune graft tables by path AND Spark's
-    * basePath partition discovery sees a uniform structure across
-    * commits (a per-commit uuid level between the base and the
-    * partition dirs would make discovery reject the layout). The
-    * job writes to a hidden staging dir, then files move into the
-    * shared dirs with a commit-unique prefix; snapshot isolation is
-    * unaffected because snapshots reference exact file lists.
-    */
-  private[graft] def commitDataFiles(data0: org.apache.spark.sql.DataFrame,
-      spec: Seq[PartitionField], storage: StorageOps, ns: String, t: String,
-      tableSchema: Option[StructType] = None,
-      writeOpts: Map[String, String] = Map.empty,
-      bloom: Option[graft.format.FileBloom.Spec] = None)
-      : Seq[graft.format.DataFileEntry] = {
-    // data files always carry PHYSICAL column names, so files written
-    // before and after a RENAME COLUMN stay byte-compatible
-    // (ColumnMapping; rename is metadata-only)
-    val phys = tableSchema.fold(data0)(ColumnMapping.toPhysicalDf(data0, _))
-    // derived transforms write their hidden directory column (dropped
-    // again by partitionBy — the VALUE lives in the path, never the file)
-    val data = spec.filterNot(_.isIdentity).foldLeft(phys) { (df, f) =>
-      val srcType = df.schema(f.col).dataType
-      df.withColumn(f.dirName, org.apache.spark.sql.graft.SparkInternals
-        .column(f.expr(org.apache.spark.sql.catalyst.analysis
-          .UnresolvedAttribute(Seq(f.col)), srcType)))
-    }
-    val dirCols = PartitionTransforms.dirNames(spec)
-    val dataDir = FileLocations.tableDataDir(ns, t)
-    val commitId = UUID.randomUUID().toString
-    val stagingAbs =
-      if (dirCols.isEmpty) storage.absolute(s"$dataDir/$commitId")
-      else storage.absolute(s"$dataDir/.staging-$commitId")
-    // writer tuning (bloom filters etc.) rides DataFrameWriter options
-    // into the job's hadoop conf (newHadoopConfWithOptions)
-    if (dirCols.isEmpty) data.write.options(writeOpts).parquet(stagingAbs)
-    else data.repartition(dirCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.options(writeOpts).partitionBy(dirCols: _*).parquet(stagingAbs)
-    finalizeCommitDir(storage, ns, t, commitId, dirCols, bloom)
-  }
-
-  /** Turn a finished parquet job under the commit's staging location
-    * into the commit's [[graft.format.DataFileEntry]] list.
-    *
-    * Non-partitioned: the staging dir IS the commit dir
-    * (`files/<uuid>/`) — nothing moves. Partitioned: staged
-    * `col=value/part-*.parquet` files move into the SHARED Hive-style
-    * dirs under the table data root with a commit-unique name prefix
-    * (Spark's basePath partition discovery rejects a per-commit dir
-    * level between base and `col=value`). Moves go through
-    * [[StorageOps.move]] so the object-store backend works too — a
-    * store with no rename copies server-side and deletes.
-    */
-  private[graft] def finalizeCommitDir(storage: StorageOps, ns: String,
-      t: String, commitId: String, partCols: Seq[String],
-      bloom: Option[graft.format.FileBloom.Spec] = None)
-      : Seq[graft.format.DataFileEntry] = {
-    val dataDir = FileLocations.tableDataDir(ns, t)
-    if (partCols.isEmpty)
-      return GraftTable.listCommitFiles(storage, s"$dataDir/$commitId", bloom)
-    val staging = s"$dataDir/.staging-$commitId"
-    val moved = storage.listDeep(staging)
-      .filter(_.endsWith(".parquet"))
-      .map { rel =>
-        val sub = rel.stripPrefix(s"$staging/") // col=value/part-*.parquet
-        val i = sub.lastIndexOf('/')
-        require(i > 0, s"staged file outside a partition dir: $rel")
-        val target = s"$dataDir/${sub.take(i)}/$commitId-${sub.drop(i + 1)}"
-        storage.move(rel, target)
-        target
-      }
-    storage.deleteTree(staging) // job markers (_SUCCESS) + empty dirs
-    val keys = moved.sorted
-    // blooms build AFTER the move so sidecars live beside final paths
-    val stats = GraftTable.harvestStats(storage, keys, bloom)
-    keys.map(k => GraftTable.fileEntry(dataDir, k, stats(k)))
-  }
 }

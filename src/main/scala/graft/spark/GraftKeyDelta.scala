@@ -1,17 +1,13 @@
 package graft.spark
 
-import java.util.UUID
-
 import graft.format.{EqDeleteFile, EqDeleteFiles}
-import graft.objects.FileLocations
 import graft.storage.StorageOps
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder => VSortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, WriterCommitMessage}
-import org.apache.spark.sql.graft.SparkInternals
+import org.apache.spark.sql.connector.write.{DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, WriterCommitMessage}
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
@@ -111,7 +107,7 @@ class GraftKeyDeltaWrite(
 }
 
 private case class KeyDeltaTaskCommit(
-    dataMsg: Option[WriterCommitMessage],
+    dataMsg: WriterCommitMessage,
     deleteRel: Option[String],
     deleteRows: Long) extends WriterCommitMessage
 
@@ -123,18 +119,8 @@ class GraftKeyDeltaBatchWrite(
     keys: Seq[String]) extends DeltaBatchWrite {
 
   private val storage: StorageOps = table.storageOps
-  private val spec = table.partitionSpec
-  private val partCols = PartitionTransforms.dirNames(spec)
-  private val commitId = UUID.randomUUID().toString
-  private val dataDir =
-    FileLocations.tableDataDir(table.namespaceName, table.tableName)
-  private val stagingRel =
-    if (partCols.isEmpty) s"$dataDir/$commitId"
-    else s"$dataDir/.staging-$commitId"
-  private val deletesRel = s"$dataDir/deletes/$commitId"
+  private val files = DataFileWrite(table, info.schema(), info.queryId())
 
-  private val physSchema =
-    ColumnMapping.toPhysicalRequired(info.schema(), table.schema)
   // the delete object's columns carry PHYSICAL names (rename-safe,
   // same rule as the streaming upsert sink); key VALUES arrive under
   // the rowId projection in `keys` order
@@ -143,32 +129,19 @@ class GraftKeyDeltaBatchWrite(
   private val keyTypes: Seq[DataType] =
     keys.map(k => table.schema.fields.find(_.name == k).get.dataType)
 
-  private def spark: ClassicSession =
-    org.apache.spark.sql.SparkSession.active.asInstanceOf[ClassicSession]
-
-  private lazy val dataDelegate =
-    SparkInternals.parquetBatchWrite(spark,
-      PartitionTransforms.extendSchema(physSchema, spec), partCols,
-      storage.absolute(stagingRel), info.queryId(),
-      GraftWriteSupport.parquetOptions(table))
-
   override def createBatchWriterFactory(pi: PhysicalWriteInfo)
-      : DeltaWriterFactory = {
-    val dataFactory = GraftWriteSupport.deriving(
-      dataDelegate.createBatchWriterFactory(pi), physSchema, spec)
-    new GraftKeyDeltaWriterFactory(dataFactory, deletesRel,
-      storage.absolute(deletesRel), physKeys, keyTypes,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-  }
+      : DeltaWriterFactory =
+    new GraftKeyDeltaWriterFactory(files.factory(pi), files.deletesRel,
+      storage.absolute(files.deletesRel), physKeys, keyTypes,
+      new SerializableConfiguration(org.apache.spark.sql.SparkSession.active
+        .asInstanceOf[ClassicSession].sessionState.newHadoopConf()))
 
-  override def useCommitCoordinator(): Boolean = false
+  override def useCommitCoordinator(): Boolean =
+    DataFileWrite.UseCommitCoordinator
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.collect { case m: KeyDeltaTaskCommit => m }
-    dataDelegate.commit(msgs.flatMap(_.dataMsg).toArray)
-    val newFiles = GraftCatalog.finalizeCommitDir(
-      storage, table.namespaceName, table.tableName, commitId, partCols,
-      table.fileBloomSpec)
+    val newFiles = files.commit(msgs.map(_.dataMsg))
     val eqDeletes = msgs.filter(_.deleteRel.nonEmpty).map { m =>
       EqDeleteFile(m.deleteRel.get, m.deleteRows,
         storage.sizeOf(m.deleteRel.get), physKeys)
@@ -177,19 +150,13 @@ class GraftKeyDeltaBatchWrite(
       cmd.toString.toLowerCase(java.util.Locale.ROOT))
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.collect { case m: KeyDeltaTaskCommit => m }
-    try dataDelegate.abort(msgs.flatMap(_.dataMsg).toArray)
-    finally {
-      storage.deleteTree(stagingRel)
-      storage.deleteTree(deletesRel)
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    files.abort(messages.collect { case m: KeyDeltaTaskCommit => m.dataMsg })
 }
 
-/** Executor side: inserts stream through the delegated parquet data
-  * writer; deleted/updated KEYS stream into one equality-delete
-  * parquet object per task. Both writers open lazily.
+/** Executor side: inserts stream through the data-file writer;
+  * deleted/updated KEYS stream into one equality-delete parquet object
+  * per task. Both open their file at the first row.
   */
 private class GraftKeyDeltaWriterFactory(
     dataFactory: DataWriterFactory,
@@ -202,15 +169,11 @@ private class GraftKeyDeltaWriterFactory(
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] = new DeltaWriter[InternalRow] {
 
-    private var dataWriter: DataWriter[InternalRow] = _
+    private val dataWriter = dataFactory.createWriter(partitionId, taskId)
     private var keyWriter: EqDeleteFiles.Writer = _
     private val delName = f"eq-$partitionId%05d-$taskId.parquet"
 
-    override def insert(row: InternalRow): Unit = {
-      if (dataWriter == null)
-        dataWriter = dataFactory.createWriter(partitionId, taskId)
-      dataWriter.write(row)
-    }
+    override def insert(row: InternalRow): Unit = dataWriter.write(row)
 
     override def delete(meta: InternalRow, id: InternalRow): Unit = {
       if (keyWriter == null)
@@ -226,7 +189,7 @@ private class GraftKeyDeltaWriterFactory(
     }
 
     override def commit(): WriterCommitMessage = {
-      val dataMsg = Option(dataWriter).map(_.commit())
+      val dataMsg = dataWriter.commit()
       val rows = Option(keyWriter).map(_.close())
       KeyDeltaTaskCommit(dataMsg,
         rows.map(_ => s"$deletesRel/$delName"),
@@ -234,11 +197,10 @@ private class GraftKeyDeltaWriterFactory(
     }
 
     override def abort(): Unit = {
-      try if (dataWriter != null) dataWriter.abort()
+      try dataWriter.abort()
       finally if (keyWriter != null) keyWriter.abort()
     }
 
-    override def close(): Unit =
-      if (dataWriter != null) dataWriter.close()
+    override def close(): Unit = dataWriter.close()
   }
 }

@@ -1,9 +1,6 @@
 package graft.spark
 
-import java.util.UUID
-
 import graft.format.{PosDeleteFile, PosDeleteFiles}
-import graft.objects.FileLocations
 import graft.storage.StorageOps
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
@@ -11,9 +8,7 @@ import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder => VSortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, WriterCommitMessage}
-import org.apache.spark.sql.graft.SparkInternals
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.connector.write.{DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, WriterCommitMessage}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
@@ -107,7 +102,7 @@ class GraftDeltaWrite(
   * the inner parquet writer's message for inserted/updated rows.
   */
 private case class DeltaTaskCommit(
-    dataMsg: Option[WriterCommitMessage],
+    dataMsg: WriterCommitMessage,
     deleteRel: Option[String],
     dataFiles: Seq[String],
     deleteRows: Long) extends WriterCommitMessage
@@ -119,50 +114,21 @@ class GraftDeltaBatchWrite(
     info: LogicalWriteInfo) extends DeltaBatchWrite {
 
   private val storage: StorageOps = table.storageOps
-  private val spec = table.partitionSpec
-  private val partCols = PartitionTransforms.dirNames(spec)
-  private val commitId = UUID.randomUUID().toString
-  private val dataDir =
-    FileLocations.tableDataDir(table.namespaceName, table.tableName)
-  private val stagingRel =
-    if (partCols.isEmpty) s"$dataDir/$commitId"
-    else s"$dataDir/.staging-$commitId"
-  private val deletesRel = s"$dataDir/deletes/$commitId"
-
-  // replacement rows carry PHYSICAL column names (rename-safe writes)
-  private val physSchema =
-    ColumnMapping.toPhysicalRequired(info.schema(), table.schema)
-
-  private def spark: ClassicSession =
-    org.apache.spark.sql.SparkSession.active.asInstanceOf[ClassicSession]
-
-  private lazy val dataDelegate =
-    SparkInternals.parquetBatchWrite(spark,
-      PartitionTransforms.extendSchema(physSchema, spec), partCols,
-      storage.absolute(stagingRel), info.queryId(),
-      GraftWriteSupport.parquetOptions(table))
+  private val files = DataFileWrite(table, info.schema(), info.queryId())
 
   override def createBatchWriterFactory(pi: PhysicalWriteInfo)
-      : DeltaWriterFactory = {
-    val dataFactory = GraftWriteSupport.deriving(
-      dataDelegate.createBatchWriterFactory(pi), physSchema, spec)
-    new GraftDeltaWriterFactory(dataFactory, deletesRel,
-      storage.absolute(deletesRel),
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-  }
+      : DeltaWriterFactory =
+    new GraftDeltaWriterFactory(files.factory(pi), files.deletesRel,
+      storage.absolute(files.deletesRel),
+      new SerializableConfiguration(org.apache.spark.sql.SparkSession.active
+        .asInstanceOf[ClassicSession].sessionState.newHadoopConf()))
 
-  // the delegated FileCommitProtocol coordinates task commits itself
-  // (FileBatchWrite does the same); a second V2-level authorization
-  // would race it — and delete objects are uniquely named per task, so
-  // they need no coordination at all
-  override def useCommitCoordinator(): Boolean = false
+  override def useCommitCoordinator(): Boolean =
+    DataFileWrite.UseCommitCoordinator
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.collect { case m: DeltaTaskCommit => m }
-    dataDelegate.commit(msgs.flatMap(_.dataMsg).toArray)
-    val newFiles = GraftCatalog.finalizeCommitDir(
-      storage, table.namespaceName, table.tableName, commitId, partCols,
-      table.fileBloomSpec)
+    val newFiles = files.commit(msgs.map(_.dataMsg))
     // `_file` strings (URI paths of absolute locations) → the
     // snapshot's storage-relative entry paths
     val byNorm = table.currentFileTuples.map { case (abs, e) =>
@@ -179,21 +145,15 @@ class GraftDeltaBatchWrite(
       cmd.toString.toLowerCase(java.util.Locale.ROOT))
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.collect { case m: DeltaTaskCommit => m }
-    try dataDelegate.abort(msgs.flatMap(_.dataMsg).toArray)
-    finally {
-      storage.deleteTree(stagingRel)
-      storage.deleteTree(deletesRel)
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    files.abort(messages.collect { case m: DeltaTaskCommit => m.dataMsg })
 }
 
-/** Executor side: inserts stream through the delegated parquet data
-  * writer; deletes stream (pre-sorted by the required ordering) into
-  * one position-delete parquet object per task. Both writers open
-  * LAZILY — a task that only deletes writes no data file and vice
-  * versa.
+/** Executor side: inserts stream through the data-file writer;
+  * deletes stream (pre-sorted by the required ordering) into one
+  * position-delete parquet object per task. Both open their file at
+  * the first row — a task that only deletes writes no data file and
+  * vice versa.
   */
 private class GraftDeltaWriterFactory(
     dataFactory: DataWriterFactory,
@@ -204,15 +164,11 @@ private class GraftDeltaWriterFactory(
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] = new DeltaWriter[InternalRow] {
 
-    private var dataWriter: DataWriter[InternalRow] = _
+    private val dataWriter = dataFactory.createWriter(partitionId, taskId)
     private var delWriter: PosDeleteFiles.Writer = _
     private val delName = f"del-$partitionId%05d-$taskId.parquet"
 
-    override def insert(row: InternalRow): Unit = {
-      if (dataWriter == null)
-        dataWriter = dataFactory.createWriter(partitionId, taskId)
-      dataWriter.write(row)
-    }
+    override def insert(row: InternalRow): Unit = dataWriter.write(row)
 
     override def delete(meta: InternalRow, id: InternalRow): Unit = {
       if (delWriter == null)
@@ -228,7 +184,7 @@ private class GraftDeltaWriterFactory(
     }
 
     override def commit(): WriterCommitMessage = {
-      val dataMsg = Option(dataWriter).map(_.commit())
+      val dataMsg = dataWriter.commit()
       val del = Option(delWriter).map(_.close())
       DeltaTaskCommit(dataMsg,
         del.map(_ => s"$deletesRel/$delName"),
@@ -237,11 +193,10 @@ private class GraftDeltaWriterFactory(
     }
 
     override def abort(): Unit = {
-      try if (dataWriter != null) dataWriter.abort()
+      try dataWriter.abort()
       finally if (delWriter != null) delWriter.abort()
     }
 
-    override def close(): Unit =
-      if (dataWriter != null) dataWriter.close()
+    override def close(): Unit = dataWriter.close()
   }
 }

@@ -1,10 +1,6 @@
 package graft.spark
 
-import java.util.UUID
-
 import graft.format.DataFileEntry
-import graft.objects.FileLocations
-import graft.storage.StorageOps
 import graft.txn.ActionType
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
@@ -429,40 +425,16 @@ class GraftCowBatchWrite(
     op: GraftRowLevelOperation,
     info: LogicalWriteInfo) extends BatchWrite {
 
-  private val storage: StorageOps = table.storageOps
-  private val spec = table.partitionSpec
-  private val partCols = PartitionTransforms.dirNames(spec)
-  private val commitId = UUID.randomUUID().toString
-  private val dataDir =
-    FileLocations.tableDataDir(table.namespaceName, table.tableName)
-  private val stagingRel =
-    if (partCols.isEmpty) s"$dataDir/$commitId"
-    else s"$dataDir/.staging-$commitId"
-
-  // data files always carry PHYSICAL column names (rename-safe
-  // writes, ColumnMapping) — rows are positional, so re-labeling the
-  // write schema is the whole job
-  private val physSchema =
-    ColumnMapping.toPhysicalRequired(info.schema(), table.schema)
-
-  private lazy val delegate: BatchWrite =
-    SparkInternals.parquetBatchWrite(
-      org.apache.spark.sql.SparkSession.active.asInstanceOf[ClassicSession],
-      PartitionTransforms.extendSchema(physSchema, spec), partCols,
-      storage.absolute(stagingRel), info.queryId(),
-      GraftWriteSupport.parquetOptions(table))
+  private val files = DataFileWrite(table, info.schema(), info.queryId())
 
   override def createBatchWriterFactory(pi: PhysicalWriteInfo): DataWriterFactory =
-    GraftWriteSupport.deriving(delegate.createBatchWriterFactory(pi),
-      physSchema, spec)
+    files.factory(pi)
 
-  override def useCommitCoordinator(): Boolean = delegate.useCommitCoordinator()
+  override def useCommitCoordinator(): Boolean =
+    DataFileWrite.UseCommitCoordinator
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    delegate.commit(messages) // finalizes parquet under the staging dir
-    val newFiles = GraftCatalog.finalizeCommitDir(
-      storage, table.namespaceName, table.tableName, commitId, partCols,
-      table.fileBloomSpec)
+    val newFiles = files.commit(messages)
     val actionType = op.command() match {
       case RowLevelOperation.Command.DELETE => ActionType.TableDelete
       case _ => ActionType.TableUpdate
@@ -471,8 +443,6 @@ class GraftCowBatchWrite(
       op.command().toString.toLowerCase(java.util.Locale.ROOT), actionType)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    try delegate.abort(messages)
-    finally storage.deleteTree(stagingRel)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    files.abort(messages)
 }

@@ -1,38 +1,34 @@
 package org.apache.spark.sql.graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.Job
-import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 
-import org.apache.spark.internal.io.FileCommitProtocol
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, JoinedRow}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.write.BatchWrite
-import org.apache.spark.sql.execution.datasources.{FilePartition, WriteJobDescription}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.{FileBatchWrite, FileWriterFactory}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.WriteToDataSourceV2
 import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** Access seam for Spark internals the graft connector builds on (the
   * standard connector-shim pattern — a small file in the
-  * `org.apache.spark.sql` namespace). Only three entries need that
+  * `org.apache.spark.sql` namespace). Four entries need that
   * namespace's `private[sql]` access: [[column]] (the classic-session
-  * expression bridge), [[unwrapRowLevelTable]] and
-  * [[unloadAllStateStores]]. The rest uses public, if unstable, Spark
-  * classes and could move out: glue over Spark's parquet write and
-  * file-index machinery ([[parquetBatchWrite]], [[derivingWriterFactory]],
-  * [[parquetScanBuilder]]) and the batch plumbing the scan paths share
-  * (one-file partitions with a `_file` tag, column reorder, constant
-  * tags, key grouping, concatenation), which wraps delegate readers
-  * without dropping a row. No delete logic lives here: merge-on-read
-  * deletes apply in [[graft.spark.MorDeleteReader]].
+  * expression bridge), [[unwrapRowLevelTable]], [[runBatchWrite]]
+  * (`Dataset.ofRows`) and [[unloadAllStateStores]]. The rest uses
+  * public, if unstable, Spark classes and could move out: the
+  * file-index glue of [[parquetScanBuilder]] and the batch plumbing
+  * the scan paths share (one-file partitions with a `_file` tag,
+  * column reorder, constant tags, key grouping, concatenation), which
+  * wraps delegate readers without dropping a row. No delete logic
+  * lives here (merge-on-read deletes apply in
+  * [[graft.spark.MorDeleteReader]]), and no write glue (data files are
+  * written by [[graft.spark.DataFileWrite]]).
   */
 object SparkInternals {
 
@@ -54,82 +50,18 @@ object SparkInternals {
     case other => other
   }
 
-  /** A real DSv2 [[BatchWrite]] producing parquet under `outDir` —
-    * exactly the files `DataFrame.write.parquet` would produce, but
-    * drivable from a connector write path (ReplaceData has no V1
-    * fallback). `partCols` nonempty ⇒ Hive-style `col=value` dynamic
-    * partition layout (those columns are not stored in the files).
+  /** Run `write` over `df`'s rows through Spark's own V2 write node,
+    * so task commit and abort, the SQL execution id, AQE and the
+    * metrics stay Spark's (`Dataset.ofRows` is `private[sql]`).
+    * `WriteToDataSourceV2` is deprecated for connectors, but Spark
+    * still plans micro-batch streaming writes through it.
     */
-  def parquetBatchWrite(
-      spark: SparkSession,
-      schema: StructType,
-      partCols: Seq[String],
-      outDir: String,
-      queryId: String,
-      hadoopOpts: Map[String, String] = Map.empty): BatchWrite = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    job.setOutputKeyClass(classOf[Void])
-    job.setOutputValueClass(classOf[InternalRow])
-    FileOutputFormat.setOutputPath(job, new Path(outDir))
-    // per-table parquet writer tuning (bloom filters, dictionary,
-    // page/row-group sizing) rides the job conf into prepareWrite's
-    // SerializableConfiguration — executor-side writers all see it
-    hadoopOpts.foreach { case (k, v) => job.getConfiguration.set(k, v) }
-
-    val allAttrs: Seq[AttributeReference] = DataTypeUtils.toAttributes(schema)
-    val partAttrs = partCols.map { c =>
-      allAttrs.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(s"partition column $c not in $schema"))
-    }
-    val dataAttrs = allAttrs.filterNot(partAttrs.contains)
-
-    val factory = new ParquetFileFormat().prepareWrite(
-      spark, job, Map.empty, StructType(dataAttrs.map(a =>
-        org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable))))
-    // timestamps as INT64 micros whatever the session's default (INT96):
-    // only then does the footer carry the min/max that file pruning
-    // and file-selective DELETE read (INT96 has no defined order)
-    job.getConfiguration.set("spark.sql.parquet.outputTimestampType",
-      "TIMESTAMP_MICROS")
-
-    val committer = FileCommitProtocol.instantiate(
-      spark.sessionState.conf.fileCommitProtocolClass,
-      jobId = queryId,
-      outputPath = outDir)
-
-    val description = new WriteJobDescription(
-      uuid = queryId,
-      serializableHadoopConf = new SerializableConfiguration(job.getConfiguration),
-      outputWriterFactory = factory,
-      allColumns = allAttrs,
-      dataColumns = dataAttrs,
-      partitionColumns = partAttrs,
-      bucketSpec = None,
-      path = outDir,
-      customPartitionLocations = Map.empty,
-      maxRecordsPerFile = spark.sessionState.conf.maxRecordsPerFile,
-      timeZoneId = spark.sessionState.conf.sessionLocalTimeZone,
-      statsTrackers = Seq.empty)
-
-    committer.setupJob(job)
-    new FileBatchWrite(job, description, committer)
-  }
-
-  /** Wrap a [[org.apache.spark.sql.connector.write.DataWriterFactory]]
-    * so every incoming row (laid out as `input`) is extended with
-    * `extraOf(attrs)` computed columns before the delegate writes it —
-    * how hidden partition-transform directory columns are derived
-    * on the EXECUTOR, row-by-row through codegen'd projection, without
-    * the logical plan ever seeing them.
-    */
-  def derivingWriterFactory(
-      delegate: org.apache.spark.sql.connector.write.DataWriterFactory,
-      input: StructType,
-      extraOf: Seq[AttributeReference] => Seq[Expression])
-      : org.apache.spark.sql.connector.write.DataWriterFactory = {
-    val attrs = DataTypeUtils.toAttributes(input)
-    val extra = extraOf(attrs)
-    new DerivingWriterFactory(delegate, attrs, extra)
+  @annotation.nowarn("cat=deprecation")
+  def runBatchWrite(df: DataFrame, write: BatchWrite): Unit = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      WriteToDataSourceV2(None, write, ds.queryExecution.analyzed, Nil))
+      .collect()
   }
 
   /** Normalized filesystem path of a one-file [[FilePartition]] or
@@ -429,26 +361,6 @@ object SparkInternals {
     */
   def unloadAllStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
-}
-
-private class DerivingWriterFactory(
-    delegate: org.apache.spark.sql.connector.write.DataWriterFactory,
-    attrs: Seq[AttributeReference],
-    extra: Seq[Expression])
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] = {
-    val inner = delegate.createWriter(partitionId, taskId)
-    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(attrs ++ extra, attrs)
-    new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-      override def write(r: InternalRow): Unit = inner.write(proj(r))
-      override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage =
-        inner.commit()
-      override def abort(): Unit = inner.abort()
-      override def close(): Unit = inner.close()
-    }
-  }
 }
 
 /** A partition carrying the index of the sub-batch it came from. */

@@ -1330,6 +1330,46 @@ class IcebergRestSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("an Iceberg REST create keeps its properties and identity spec") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ir.xc")
+    val (server, port) = startServer()
+    try {
+      def createBody(name: String, transform: String) =
+        s"""{"name":"$name","schema":{"type":"struct","schema-id":0,"fields":[
+          |{"id":1,"name":"k","required":true,"type":"long"},
+          |{"id":2,"name":"region","required":false,"type":"string"}]},
+          |"partition-spec":{"spec-id":0,"fields":[{"source-id":2,
+          |"field-id":1000,"name":"region_part","transform":"$transform"}]},
+          |"properties":{"ext.owner":"team-a"}}""".stripMargin
+          .replaceAll("\n", "")
+      val base = "/v1/iceberg/namespaces/xc/tables"
+      val (c1, b1) = send(port, "POST", base, createBody("parted", "identity"))
+      assert(c1 == 200, b1)
+      // the load round-trips the properties and the spec (its source
+      // column resolved through the field id, not the field's name)
+      val (c2, b2) = send(port, "GET", s"$base/parted")
+      assert(c2 == 200, b2)
+      val md = Json.mapper.readTree(b2).get("metadata")
+      assert(md.get("properties").path("ext.owner").asText() == "team-a", b2)
+      val field = md.get("partition-specs").get(0).get("fields").get(0)
+      assert(field.get("transform").asText() == "identity" &&
+        field.get("name").asText() == "region", b2)
+      // a later SQL INSERT lands in Hive-style region=<value> dirs
+      spark.sql("INSERT INTO ir.xc.parted VALUES (1, 'eu'), (2, 'us')")
+      val storage = spark.sessionState.catalogManager.catalog("ir")
+        .asInstanceOf[GraftCatalog].storage
+      val keys = storage.listDeep(
+        graft.objects.FileLocations.tableDataDir("xc", "parted"))
+        .filter(_.endsWith(".parquet"))
+      assert(Seq("region=eu/", "region=us/").forall(d =>
+        keys.exists(_.contains(d))), keys)
+      // a non-identity transform is refused, saying why
+      val (c3, b3) = send(port, "POST", base, createBody("bucketed", "bucket[4]"))
+      assert(c3 == 400 && b3.contains("identity transforms"), s"$c3 $b3")
+      assert(send(port, "HEAD", s"$base/bucketed")._1 == 404)
+    } finally server.stop()
+  }
+
   test("malformed client manifests and missing files map to 400, not 500") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ir.xm")
     spark.sql("CREATE TABLE ir.xm.t (k BIGINT)")
